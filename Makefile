@@ -3,7 +3,7 @@
 # serialized — each target runs its own local[N] session; never run
 # two in parallel on this machine.
 
-.PHONY: smoke suite selfcheck adversarial gate bench
+.PHONY: smoke suite selfcheck adversarial gate bench perfbench
 
 # ~4 min: contract + functions + engine units + domain model
 smoke:
@@ -31,6 +31,10 @@ adversarial:
 # idle-guarded bench (writes the headline JSON line)
 bench:
 	python bench.py
+
+# unit tests of the E1/neardup benchmark harness (perfbench/)
+perfbench:
+	python -m pytest perfbench -q
 
 # the full end-of-round gate, in dependency-light order: cheap suite
 # signal first, then the oracle snapshot, then the adversarial sweeps

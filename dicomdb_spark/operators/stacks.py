@@ -106,25 +106,38 @@ def _assemble_frame(pdf: pd.DataFrame, gid: np.ndarray) -> pd.DataFrame:
             flags.append(f"nullInstanceNumber_{z}")
         corrupt.append(";".join(flags) if flags else "ok")
 
-    out = pd.DataFrame(
-        {
-            "SeriesInstanceUID": pdf["SeriesInstanceUID"].to_numpy()[idx_first],
-            "SeriesNumber": pdf["SeriesNumber"].to_numpy()[idx_first],
-            "EchoTime": pdf["EchoTime"].to_numpy()[idx_first],
-            "nb_dic_file": n_total,
-            "first_file": path[idx_first],
-            "last_file": path[idx_last],
-            "n_duplicates": n_dup,
-            "n_missing": n_missing,
-            "corrupt": corrupt,
-            "duration_s": dur,
-        }
-    )
+    cols = {
+        "SeriesInstanceUID": pdf["SeriesInstanceUID"].to_numpy()[idx_first],
+        "SeriesNumber": pdf["SeriesNumber"].to_numpy()[idx_first],
+        "EchoTime": pdf["EchoTime"].to_numpy()[idx_first],
+        "nb_dic_file": n_total,
+        "first_file": path[idx_first],
+        "last_file": path[idx_last],
+        "n_duplicates": n_dup,
+        "n_missing": n_missing,
+        "corrupt": corrupt,
+        "duration_s": dur,
+    }
+    if LINK_COLS.keys() <= set(pdf.columns):
+        # exam linkage, min_by(·, InstanceNumber) semantics: the first
+        # row in (InstanceNumber nulls last, path) order, NULL when no
+        # row has an InstanceNumber; the acquisition time is a
+        # NaN-ignoring min over every row of the stack
+        for src, dst in LINK_COLS.items():
+            vals = pdf[src].to_numpy(dtype=object)[idx_first]
+            vals[~has_nn] = None
+            cols[dst] = vals
+        cols["first_acq_seconds"] = np.fmin.reduceat(secs, idx_first)
+    out = pd.DataFrame(cols)
     assert len(out) == n_groups
     return out
 
 
 _ASSEMBLE_COLS = list(STACK_KEYS) + ["path", "InstanceNumber", "acq_seconds"]
+
+# optional input columns carrying each file's exam key -> the output
+# columns of the stack's exam linkage (with first_acq_seconds)
+LINK_COLS = {"StudyInstanceUID": "EUID", "AcquisitionDate": "AcquisitionDate"}
 
 
 def _assemble_partition(batches):
@@ -160,7 +173,12 @@ def assemble_stacks(headers: DataFrame) -> DataFrame:
 
     Input needs columns: STACK_KEYS + path, InstanceNumber,
     acq_seconds (seconds-of-day, from F4 parsing).  One output row per
-    stack.
+    stack, typed ``STACK_SCHEMA``.  When the input also carries
+    ``LINK_COLS`` (StudyInstanceUID, AcquisitionDate), each row gains
+    the stack's exam linkage after the STACK_SCHEMA columns: ``EUID``
+    and ``AcquisitionDate`` as ``min_by(·, InstanceNumber)`` (ties
+    broken by path), and ``first_acq_seconds`` as the min
+    acq_seconds over the whole stack.
 
     Shape: hash-repartition on the stack keys + an in-partition sort
     (the identical exchange ``groupBy().applyInPandas`` produced),
@@ -173,11 +191,22 @@ def assemble_stacks(headers: DataFrame) -> DataFrame:
     places NaN keys last and orders them by the next key, which is
     Spark's ``asc_nulls_last`` + path.
     """
-    h = headers.select(*_ASSEMBLE_COLS).repartition(*STACK_KEYS)
+    cols, schema = _ASSEMBLE_COLS, STACK_SCHEMA
+    if LINK_COLS.keys() <= set(headers.columns):
+        cols = cols + list(LINK_COLS)
+        schema = T.StructType(
+            STACK_SCHEMA.fields
+            + [
+                T.StructField(dst, headers.schema[src].dataType)
+                for src, dst in LINK_COLS.items()
+            ]
+            + [T.StructField("first_acq_seconds", T.DoubleType())]
+        )
+    h = headers.select(*cols).repartition(*STACK_KEYS)
     h = h.sortWithinPartitions(
         *STACK_KEYS, F.col("InstanceNumber").asc_nulls_last(), "path"
     )
-    return h.mapInPandas(_assemble_partition, schema=STACK_SCHEMA)
+    return h.mapInPandas(_assemble_partition, schema=schema)
 
 
 BVEC_SCHEMA = T.StructType(

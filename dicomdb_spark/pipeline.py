@@ -6,10 +6,12 @@ recompute exam duration.  Here each stage is one DataFrame
 transformation; the whole pipeline is lazy until the sink.
 
 Scale shape: the scan and parse are map-only; the stack/series
-aggregation shuffles once on the stack key; the exam aggregation
-shuffles once on (StudyInstanceUID, day); the MERGE classification is
-one broadcast-or-shuffled join against the target snapshot.  Four
-stages, three shuffles, no driver-side loops.
+assembly, exam linkage included, shuffles once on the stack key and
+runs one ``mapInPandas`` kernel; the exam aggregation shuffles once on
+(EUID, AcquisitionDate); the MERGE classification is one
+broadcast-or-shuffled join against the target snapshot.  Each
+consumer of the serie frame scans and parses every file once; no
+driver-side loops.
 """
 
 from __future__ import annotations
@@ -61,14 +63,26 @@ def extract_headers(
 
 
 def build_serie_frame(headers: DataFrame) -> DataFrame:
-    """Stage 3a: per-stack serie rows (U3 assembly + audits).
+    """Stage 3a: per-stack serie rows (U3 assembly + audits) with the
+    exam linkage (EUID, AcquisitionDate, first_acq_seconds) computed
+    in the same assembly kernel: one exchange on the stack key, one
+    ``mapInPandas``, no join — so each consumer of the frame scans and
+    parses every file once.
+
+    Drops every file whose SeriesInstanceUID, SeriesNumber or
+    EchoTime is NULL, before the exchange: a stack with an incomplete
+    key yields no serie row (the DB key is the full stack tuple).
 
     acq_seconds derives from the raw HHMMSS time string (F4).
     """
-    h = headers.withColumn(
+    h = headers.filter(
+        F.col("SeriesInstanceUID").isNotNull()
+        & F.col("SeriesNumber").isNotNull()
+        & F.col("EchoTime").isNotNull()
+    ).withColumn(
         "acq_seconds", time_str_to_sec(F.col("AcquisitionTimeRaw")).cast("double")
     )
-    stacks = assemble_stacks(
+    return assemble_stacks(
         h.select(
             "SeriesInstanceUID",
             "SeriesNumber",
@@ -76,16 +90,10 @@ def build_serie_frame(headers: DataFrame) -> DataFrame:
             "path",
             "InstanceNumber",
             "acq_seconds",
+            "StudyInstanceUID",
+            "AcquisitionDate",
         )
     )
-    # re-attach exam linkage + date (one representative per stack —
-    # first by InstanceNumber, deterministic)
-    link = h.groupBy("SeriesInstanceUID", "SeriesNumber", "EchoTime").agg(
-        F.min_by("StudyInstanceUID", "InstanceNumber").alias("EUID"),
-        F.min_by("AcquisitionDate", "InstanceNumber").alias("AcquisitionDate"),
-        F.min("acq_seconds").alias("first_acq_seconds"),
-    )
-    return stacks.join(link, ["SeriesInstanceUID", "SeriesNumber", "EchoTime"])
 
 
 def build_exam_frame(serie: DataFrame) -> DataFrame:

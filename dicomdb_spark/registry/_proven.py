@@ -414,10 +414,21 @@ ENGINE_MODULES_ACK: dict[str, tuple[str, ...]] = {
     ),
     # r13 optimization: assemble_stacks vectorized — same key exchange
     # + in-partition sort, but ONE mapInPandas segment kernel per
-    # partition instead of one Python call per stack (guide §4.2)
+    # partition instead of one Python call per stack (guide §4.2);
+    # the kernel now also emits the exam linkage (EUID,
+    # AcquisitionDate, first_acq_seconds) when its input carries the
+    # exam key columns — six-column callers keep STACK_SCHEMA
     "dicomdb_spark/operators/stacks.py": (
         "u3_stack_assembly", "e1_import_pipeline",
     ),
+    # build_serie_frame reads the linkage from the assembly kernel
+    # (no min_by link aggregate, no join): one parse per consumer;
+    # NULL stack keys dropped by an explicit filter before the exchange
+    "dicomdb_spark/pipeline.py": ("e1_import_pipeline",),
+    # registers its closures for by-value pickling (upsert writers
+    # run in workers without the package on their path); no registry
+    # query calls it — covered by the JDBC round-trip tests
+    "dicomdb_spark/sources/jdbc.py": (),
     # r13 optimization: repetition_stats arrays materialized once in a
     # stacked projection (interpreted HOFs get no CSE; each dup
     # fraction re-built its shingle array per reference); lang_id /

@@ -139,3 +139,11 @@ def render_remediation_scripts(df: DataFrame, command_col: str, out_path: str) -
     commands) as query OUTPUT (Cenir_DB.py:174-187).  Engine twin: a
     text write of the generated command column."""
     df.select(command_col).write.mode("overwrite").text(out_path)
+
+
+# UDF closures in this module must ship by value (see package __init__)
+import sys as _sys  # noqa: E402
+
+from dicomdb_spark import register_for_udf_pickling as _reg  # noqa: E402
+
+_reg(_sys.modules[__name__])

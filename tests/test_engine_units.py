@@ -168,39 +168,69 @@ def test_assemble_null_instance_degrades_to_flag(spark):
     assert out.n_missing == 0 and out.n_duplicates == 0
 
 
+_STACK_IN_SCHEMA = (
+    "SeriesInstanceUID string, SeriesNumber int, EchoTime double, "
+    "path string, InstanceNumber int, acq_seconds double, "
+    "StudyInstanceUID string, AcquisitionDate string"
+)
+
+
+def _linked_stacks_reference(h):
+    """The exam linkage as a separate aggregate joined back onto the
+    stacks: the formulation the fused kernel must reproduce."""
+    keys = list(stacks.STACK_KEYS)
+    assembled = stacks.assemble_stacks(h.drop(*stacks.LINK_COLS))
+    link = h.groupBy(*keys).agg(
+        F.min_by("StudyInstanceUID", "InstanceNumber").alias("EUID"),
+        F.min_by("AcquisitionDate", "InstanceNumber").alias("AcquisitionDate"),
+        F.min("acq_seconds").alias("first_acq_seconds"),
+    )
+    return assembled.join(link, keys)
+
+
 def test_assemble_stacks_groups_span_arrow_batches(spark):
     # r13 optimization regression: the vectorized mapInPandas kernel
     # must carry a stack whose rows straddle Arrow batch boundaries
     # (tiny maxRecordsPerBatch forces multi-batch groups) and still
-    # reproduce the per-group fold's numbers exactly
+    # reproduce the per-group fold's numbers exactly — and, given the
+    # exam key columns, the stacks ⋈ min_by link rows exactly
     prev = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
     spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "7")
     try:
         rows = []
+
+        def add(uid, sn, echo, path, inst, secs, study="st", day="20240101"):
+            rows.append((uid, sn, echo, path, inst, secs, study, day))
+
         # stack X: instances 1..40 each twice (40 dups), plus inst 45
-        # (4 missing: 41-44)
+        # (4 missing: 41-44); the linkage must come from inst 1
         for i in range(40):
             for rep in range(2):
-                rows.append(
-                    Row(SeriesInstanceUID="X", SeriesNumber=1, EchoTime=1.0,
-                        path=f"/x/f{i}_{rep}.dic", InstanceNumber=i + 1,
-                        acq_seconds=float(100 + i))
-                )
-        rows.append(
-            Row(SeriesInstanceUID="X", SeriesNumber=1, EchoTime=1.0,
-                path="/x/tail.dic", InstanceNumber=45,
-                acq_seconds=86399.0)
-        )
+                add("X", 1, 1.0, f"/x/f{i}_{rep}.dic", i + 1, float(100 + i),
+                    study="st.X" if i == 0 else f"late.X{i}",
+                    day="20240101" if i == 0 else "20240102")
+        add("X", 1, 1.0, "/x/tail.dic", 45, 86399.0, study="late.X45")
         # stack Y: clean 1..3, rollover duration (86390 -> 5)
         for i, sec in enumerate([86390.0, 5.0, 10.0]):
-            rows.append(
-                Row(SeriesInstanceUID="Y", SeriesNumber=1, EchoTime=1.0,
-                    path=f"/y/f{i}.dic", InstanceNumber=i + 1,
-                    acq_seconds=sec)
-            )
+            add("Y", 1, 1.0, f"/y/f{i}.dic", i + 1, sec, study=f"st.Y{i}")
+        # stack Z: no InstanceNumber at all -> NULL EUID/date, but the
+        # acquisition-time min still holds
+        for i, sec in enumerate([300.0, 200.0, 400.0]):
+            add("Z", 3, 1.0, f"/z/f{i}.dic", None, sec, study="st.Z")
+        # stack W: NULL acquisition times, the first-ordered row's too
+        for i, sec in enumerate([None, 700.0, None, 650.0]):
+            add("W", 4, 1.0, f"/w/f{i}.dic", i + 1, sec, study="st.W")
+        add("W0", 5, 1.0, "/w0/f0.dic", 1, None, study="st.W0")
+        # dual-echo series: one SeriesInstanceUID, two stacks by echo
+        for echo in (4.92, 7.38):
+            for i in range(3):
+                add("D", 6, echo, f"/d/e{echo}_{i}.dic", i + 1,
+                    1000.0 + 10 * i + echo, study=f"st.D{echo}")
+
+        h = spark.createDataFrame(rows, _STACK_IN_SCHEMA)
         out = {
             r.SeriesInstanceUID: r
-            for r in stacks.assemble_stacks(spark.createDataFrame(rows)).collect()
+            for r in stacks.assemble_stacks(h.drop(*stacks.LINK_COLS)).collect()
         }
         x, y = out["X"], out["Y"]
         assert x.nb_dic_file == 81
@@ -210,6 +240,23 @@ def test_assemble_stacks_groups_span_arrow_batches(spark):
         # first two sorted instants are the duplicated inst 1 pair
         assert x.duration_s == 0.0
         assert y.corrupt == "ok" and y.duration_s == 15.0
+
+        fused = stacks.assemble_stacks(h)
+        ref = _linked_stacks_reference(h)
+        assert fused.schema.simpleString() == ref.schema.simpleString()
+        got = sorted(fused.collect(), key=repr)
+        assert got == sorted(ref.collect(), key=repr)
+        by_key = {(r.SeriesInstanceUID, r.EchoTime): r for r in got}
+        assert len(by_key) == 7
+        assert by_key[("X", 1.0)].EUID == "st.X"
+        assert by_key[("X", 1.0)].AcquisitionDate == "20240101"
+        z = by_key[("Z", 1.0)]
+        assert z.EUID is None and z.AcquisitionDate is None
+        assert z.first_acq_seconds == 200.0
+        assert by_key[("W", 1.0)].first_acq_seconds == 650.0
+        assert by_key[("W0", 1.0)].first_acq_seconds is None
+        assert by_key[("D", 4.92)].EUID == "st.D4.92"
+        assert by_key[("D", 7.38)].EUID == "st.D7.38"
     finally:
         spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", prev)
 
@@ -1029,6 +1076,14 @@ def test_upsert_partition_writer_executes_batches():
     assert all(s.startswith("INSERT INTO `exam`") for s in executed)
     assert len(commits) == 3  # 2 batch commits + final
     assert closed == [1]
+
+
+def test_jdbc_writers_pickle_by_value():
+    # upsert_partition_writer closures run in Python workers that may
+    # not have the package on their path: they must ship by value
+    from pyspark import cloudpickle
+
+    assert jdbc.__name__ in cloudpickle.list_registry_pickle_by_value()
 
 
 def test_hyperplane_bucket_literal_planes(spark):

@@ -190,3 +190,40 @@ def test_pipeline_end_to_end_real_part10(spark, part10_tree):
     # subj01 sessionizes into two exams by date; subj02 one
     assert len(exams) == 3
     assert exams[("study.subj01.20240101", "20240101")].n_series == 2
+
+
+def test_serie_frame_drops_null_stack_keys(spark, tmp_path):
+    """A file whose SeriesNumber or EchoTime is NULL has an incomplete
+    stack key: it yields no serie row, and the complete series beside
+    it keeps only its own files."""
+
+    def parser(content: bytes) -> dict:
+        uid, sn, echo, inst = content[132:].decode().split("|")
+        return {
+            "SeriesInstanceUID": uid,
+            "StudyInstanceUID": "study.1",
+            "SeriesNumber": int(sn) if sn else None,
+            "InstanceNumber": int(inst),
+            "EchoTime": float(echo) if echo else None,
+            "AcquisitionDate": "20240101",
+            "AcquisitionTimeRaw": f"0900{int(inst):02d}.000000",
+        }
+
+    files = {
+        "S01_good": [("good", "1", "2.5", i) for i in (1, 2, 3)]
+        + [("good", "", "2.5", 4)],
+        "S02_noecho": [("noecho", "2", "", 1)],
+    }
+    for ser, recs in files.items():
+        d = tmp_path / "PROTO_A" / "subj01" / ser
+        d.mkdir(parents=True)
+        for k, rec in enumerate(recs):
+            payload = "|".join(map(str, rec)).encode()
+            (d / f"im{k}.dic").write_bytes(b"\x00" * 128 + b"DICM" + payload)
+
+    headers = pipeline.extract_headers(spark, str(tmp_path), parser=parser)
+    assert headers.count() == 5
+    rows = pipeline.build_serie_frame(headers).collect()
+    assert [(r.SeriesInstanceUID, r.SeriesNumber, r.nb_dic_file) for r in rows] == [
+        ("good", 1, 3)
+    ]

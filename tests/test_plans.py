@@ -24,6 +24,37 @@ def test_j1_broadcasts_all_dimensions(spark):
     assert li.count(":") == 3, li
 
 
+def test_serie_frame_parses_each_file_once(spark, tmp_path):
+    # the exam linkage rides in the stack-assembly kernel: one scan,
+    # one parse, one exchange — a second parse branch joined back
+    # onto the stacks would double the Arrow traffic of the import
+    from dicomdb_spark import pipeline as P
+    from dicomdb_spark.sources.dicom import encode_minimal_dicom
+
+    d = tmp_path / "PROTO_A" / "subj01" / "S01_mprage"
+    d.mkdir(parents=True)
+    for i in range(3):
+        (d / f"im{i}.dic").write_bytes(
+            encode_minimal_dicom(
+                {
+                    "SeriesInstanceUID": "1.2.3",
+                    "StudyInstanceUID": "1.2",
+                    "SeriesNumber": "1",
+                    "InstanceNumber": str(i + 1),
+                    "EchoTime": "2.5",
+                    "AcquisitionDate": "20240101",
+                    "AcquisitionTimeRaw": f"0900{i:02d}.000000",
+                }
+            )
+        )
+    df = P.build_serie_frame(P.extract_headers(spark, str(tmp_path)))
+    plan = pi.simple_plan(df)
+    assert plan.count("FileScan binaryFile") == 1, plan
+    assert plan.count("MapInPandas run(") == 1, plan
+    assert "Join" not in plan, plan
+    assert pi.count_shuffles(df) == 1, plan
+
+
 def test_p3_filters_push_into_scan(spark):
     df = QUERIES["p3_composite_key"](spark, SF)
     pushed = " ".join(pi.pushed_filters(df))
