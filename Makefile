@@ -14,19 +14,16 @@ suite:
 	python -m pytest tests/ -x -q
 
 # full-registry oracle snapshot at sf0.01 (SELFCHECK_r{N}.json);
-# pass R=13 etc. as `make selfcheck R=13`
+# pass R=13 etc. as `make selfcheck R=13`; exits non-zero on any FAIL
 R ?= dev
 selfcheck:
-	python selfcheck.py $(R)
+	python selfcheck.py --tag $(R)
 
-# the four degenerate-corpus sweeps — every registry query through
-# BOTH engines on hostile injected parquet; each exits non-zero on
-# any divergence.  Serial on purpose (one Spark session at a time).
+# the four degenerate-corpus sweeps in one Spark session — every
+# registry query through BOTH engines on hostile injected parquet;
+# exits non-zero on any divergence
 adversarial:
 	python adversarial_check.py
-	python adversarial_check_events.py
-	python adversarial_check_embeddings.py
-	python adversarial_check_tpch.py
 
 # idle-guarded bench (writes the headline JSON line)
 bench:

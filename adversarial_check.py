@@ -1,148 +1,105 @@
-"""Adversarial injected-corpus sweep (round-12 gate).
+#!/usr/bin/env python
+"""Hostile-corpus oracle sweep (end-of-round gate).
 
-Every documents-only query is run through BOTH engines on a corpus of
-edge-case docs (short, whitespace-only, unicode multi-byte, repetitive,
-token-less) and compared row-exact.  Natural corpora mask bug classes
-behind uniform row shapes (every sf0.001+ document is >=120-char
-mostly-ASCII text); this sweep is what exposed the DuckDB 1.0.0
-list_reduce ragged-lambda mis-binding (text_lz76_complexity), the
-array_to_string([]) NULL-vs-'' divergence (text_fingerprint,
-dedup_fingerprint, text_c4_clean), the byte-vs-char frame slicing
-(multimodal_frame_sample) and two ANSI divide-by-zero crashes on
-degenerate graphs (graph_assortativity, graph_transitivity_ratio).
+Natural testdata masks engine-divergence bug classes behind uniform
+row shapes: no NULLs, no empty or multi-byte text, no zero vectors, no
+childless dimension rows.  This sweep writes each hostile corpus of
+``dicomdb_spark.parity.CORPORA`` (documents, events, embeddings, tpch)
+into a fresh temp sf-dir, then runs every registry query whose oracle
+reads only that corpus's tables through BOTH engines — the engine via
+the real ``io.load_table`` sf-dir path — and compares rows exactly
+(``parity.canon_rows``).  What each corpus exposed is listed on its
+writer.  The queries whose oracles span two corpora (ann_rerank_topk,
+ml_knn_classify) are checked by tests/test_adversarial_corpus.py.
 
-Usage: python adversarial_check.py [query ...]   (default: all
-documents-only queries; exits non-zero on any mismatch/error).
+Usage: python adversarial_check.py [--corpus NAME ...] [QUERY ...]
+
+Default: all four corpora, one Spark session.  QUERY names restrict
+each corpus to those of its queries.  Exits non-zero on any mismatch
+or error.
 """
-import sys, re, random, os
-sys.path.insert(0, "/root/repo")
-sys.path.insert(0, "/root/repo/tests")
-import duckdb
-import pandas as pd
-from pyspark.sql import SparkSession
 
-spark = (SparkSession.builder.master("local[8]").appName("adversarial_sweep")
-         .config("spark.sql.session.timeZone", "America/New_York")
-         .config("spark.sql.shuffle.partitions", "8")
-         .config("spark.ui.enabled", "false").getOrCreate())
-spark.sparkContext.setLogLevel("ERROR")
+from __future__ import annotations
 
-from dicomdb_spark.registry._core import ORACLES, QUERIES
-from tests.conftest import patched_load_table
+import argparse
+import os
+import shutil
+import sys
+import tempfile
 
-rng = random.Random(42)
-texts = [
-    "a",                           # single char
-    " ",                           # whitespace only
-    "   \t  ",                     # mixed whitespace
-    "word",                        # one token
-    "two words",
-    "x" * 300,                     # no-space long
-    "the the the the the the",     # pure repetition
-    "ab" * 100,
-    "Hello, World! 123 456.789",   # punct + digits
-    "...!!!???",                   # punct only
-    "0123456789" * 15,
-    "café au lait — naïve résumé", # multi-byte
-    "日本語のテキストです。",         # CJK
-    "mixed ascii y café",
-    "a b c d e f g h i j k l m n o p q r s t u v w x y z",
-    "The quick brown fox jumps over the lazy dog. " * 8,
-]
-texts += [" ".join(rng.choice(["alpha","beta","gamma","delta","x","42","—"]) 
-          for _ in range(rng.randint(1, 40))) for _ in range(24)]
-langs = ["en","es","de","zh","fr"]
-srcs = ["src0","src1","src2"]
-pdf = pd.DataFrame({
-    "doc_id": range(1, len(texts)+1),
-    "text": texts,
-    "lang": [langs[i % 5] for i in range(len(texts))],
-    "source": [srcs[i % 3] for i in range(len(texts))],
-    "n_chars": [len(t) for t in texts],
-})
-# NULL-bearing rows (r13 probe): real corpora contain null text/lang —
-# every kernel must exclude or propagate NULL identically
-nulls = pd.DataFrame({
-    "doc_id": [len(texts) + 1, len(texts) + 2, len(texts) + 3],
-    "text": [None, "null text neighbor doc", None],
-    "lang": ["en", None, "de"],
-    "source": ["src0", "src1", None],
-    "n_chars": pd.array([None, 22, None], dtype="Int64"),
-})
-pdf = pd.concat([pdf, nulls], ignore_index=True)
-pdf["n_chars"] = pdf["n_chars"].astype("Int64")
-# inject via a TEMP PARQUET file, not createDataFrame: Spark converts a
-# pandas nullable Int64 column to DOUBLE on createDataFrame (14.0 vs
-# 14 false-flags every n_chars consumer), while the parquet path
-# yields the contract dtype (nullable int64) in BOTH engines
-import pyarrow as pa, pyarrow.parquet as pq
-tmpdir = "/tmp/adversarial_docs_sfdir"
-os.makedirs(tmpdir, exist_ok=True)
-pq.write_table(
-    pa.Table.from_pandas(pdf, preserve_index=False,
-                         schema=pa.schema([("doc_id", pa.int64()),
-                                           ("text", pa.string()),
-                                           ("lang", pa.string()),
-                                           ("source", pa.string()),
-                                           ("n_chars", pa.int64())])),
-    os.path.join(tmpdir, "documents.parquet"), version="2.6")
-docs = spark.read.parquet(os.path.join(tmpdir, "documents.parquet"))
+sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-def fake_load(spark_, sf_dir_, name):
-    if name != "documents":
-        raise KeyError(f"needs:{name}")
-    return docs
+from dicomdb_spark.parity import (  # noqa: E402
+    CORPORA,
+    canon_rows,
+    hostile_session,
+    oracle_con,
+    release,
+    tables_referenced,
+)
+from dicomdb_spark.registry._core import ORACLES, QUERIES  # noqa: E402
 
-con = duckdb.connect()
-con.execute(
-    f"CREATE VIEW documents AS SELECT * FROM '{tmpdir}/documents.parquet'")
 
-def norm(rows, cols):
-    order = sorted(range(len(cols)), key=lambda i: cols[i])
-    return sorted(tuple(repr(r[i]) for i in order) for r in rows)
+def _show_diff(s: list, d: list) -> None:
+    for a, b in [(a, b) for a, b in zip(s, d) if a != b][:3]:
+        print("   S:", a[:8], "\n   D:", b[:8], flush=True)
+    only_s = [r[:8] for r in s if r not in d][:2]
+    only_d = [r[:8] for r in d if r not in s][:2]
+    if only_s:
+        print("   only-S:", only_s, flush=True)
+    if only_d:
+        print("   only-D:", only_d, flush=True)
 
-names = sys.argv[1:] if len(sys.argv) > 1 else None
-targets = names or [n for n in ORACLES]
-import dicomdb_spark.registry as R
-ok = mism = err = skip = 0
-for n in targets:
-    sql = ORACLES.get(n)
-    if sql is None or "documents" not in sql.lower():
-        continue
-    if any(re.search(rf"\b{t}\b", sql.lower()) for t in
-           ["region","nation","customer","supplier","part","orders","lineitem","events","embeddings"]):
-        continue
+
+def sweep(spark, corpus: str, wanted: list[str]) -> int:
+    """Run one corpus; returns the number of mismatches plus errors."""
+    sf_dir = tempfile.mkdtemp(prefix=f"adversarial_{corpus}_")
     try:
-        with patched_load_table(fake_load):
-            sdf = QUERIES[n](spark, "unused")
-            s = norm([tuple(r) for r in sdf.collect()], sdf.columns)
-        res = con.execute(sql)
-        d = norm(res.fetchall(), [c[0] for c in res.description])
-        if s == d:
-            ok += 1
-            print(f"{n}: MATCH ({len(s)})", flush=True)
-        else:
-            mism += 1
-            print(f"{n}: MISMATCH spark={len(s)} duck={len(d)}", flush=True)
-            shown = 0
-            for a, b in zip(s, d):
-                if a != b and shown < 3:
-                    print("   S:", a[:8], "\n   D:", b[:8], flush=True)
-                    shown += 1
-            only_s = [r for r in s if r not in d][:2]
-            only_d = [r for r in d if r not in s][:2]
-            if only_s:
-                print("   only-S:", [r[:8] for r in only_s], flush=True)
-            if only_d:
-                print("   only-D:", [r[:8] for r in only_d], flush=True)
-    except KeyError as e:
-        if str(e).startswith("'needs:"):
-            skip += 1; print(f"{n}: SKIP {e}", flush=True)
-        else:
-            err += 1; print(f"{n}: ERROR KeyError {e}", flush=True)
-    except Exception as e:
-        err += 1
-        print(f"{n}: ERROR {type(e).__name__} {str(e)[:150]}", flush=True)
-    spark.catalog.clearCache()
-print(f"SUMMARY ok={ok} mismatch={mism} error={err} skip={skip}")
-sys.exit(1 if (mism or err) else 0)
+        tables = set(CORPORA[corpus](sf_dir))
+        con = oracle_con(sf_dir, tables)
+        names = [
+            n for n, sql in ORACLES.items()
+            if (refs := tables_referenced(sql)) and refs <= tables
+            and (not wanted or n in wanted)
+        ]
+        print(f"== {corpus}: {len(names)} queries", flush=True)
+        ok, mismatched, errored = 0, [], []
+        for n in names:
+            try:
+                sdf = QUERIES[n](spark, sf_dir)
+                s = canon_rows([tuple(r) for r in sdf.collect()], sdf.columns)
+                res = con.execute(ORACLES[n])
+                d = canon_rows(res.fetchall(), [c[0] for c in res.description])
+                if s == d:
+                    ok += 1
+                    print(f"{n}: MATCH ({len(s)})", flush=True)
+                else:
+                    mismatched.append(n)
+                    print(f"{n}: MISMATCH spark={len(s)} duck={len(d)}", flush=True)
+                    _show_diff(s, d)
+            except Exception as e:  # keep sweeping; the summary reports it
+                errored.append(n)
+                print(f"{n}: ERROR {type(e).__name__} {str(e)[:150]}", flush=True)
+            release(spark)
+        con.close()
+    finally:
+        shutil.rmtree(sf_dir, ignore_errors=True)
+    print(f"SUMMARY {corpus} ok={ok} mismatch={len(mismatched)} "
+          f"error={len(errored)} total={len(names)} "
+          f"unexpected={mismatched + errored}", flush=True)
+    return len(mismatched) + len(errored)
+
+
+def main(argv: list[str] | None = None) -> None:
+    ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
+    ap.add_argument("--corpus", action="append", choices=list(CORPORA),
+                    help="repeatable; default: all")
+    ap.add_argument("queries", nargs="*")
+    args = ap.parse_args(argv)
+    spark = hostile_session("adversarial_sweep")
+    bad = sum(sweep(spark, c, args.queries) for c in args.corpus or CORPORA)
+    sys.exit(1 if bad else 0)
+
+
+if __name__ == "__main__":
+    main()

@@ -429,6 +429,13 @@ ENGINE_MODULES_ACK: dict[str, tuple[str, ...]] = {
     # run in workers without the package on their path); no registry
     # query calls it — covered by the JDBC round-trip tests
     "dicomdb_spark/sources/jdbc.py": (),
+    # the oracle-parity harness (DuckDB views, canons, hostile corpora)
+    # that selfcheck, the sweep and the parity tests share; no registry
+    # query imports it
+    "dicomdb_spark/parity.py": (),
+    # local[N]/shuffle-partition fallback is the process's CPU count
+    # when SPARK_GRAFT_CPUS is unset; query semantics unchanged
+    "dicomdb_spark/session.py": (),
     # r13 optimization: repetition_stats arrays materialized once in a
     # stacked projection (interpreted HOFs get no CSE; each dup
     # fraction re-built its shingle array per reference); lang_id /

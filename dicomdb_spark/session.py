@@ -1,7 +1,7 @@
 """SparkSession factory for the dicomdb_spark engine.
 
 Single place where execution knobs live.  Everything here is tuned so
-that the SAME logical plans scale from ``local[32]`` (test harness) to
+that the SAME logical plans scale from ``local[N]`` (test harness) to
 a 1000-executor cluster:
 
 * AQE on: runtime join-strategy switches, partition coalescing and
@@ -21,7 +21,14 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+
+def _cpus() -> int:
+    """``SPARK_GRAFT_CPUS``, else the CPUs this process may run on (what
+    ``nproc`` prints)."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
+
+
+DEFAULT_SHUFFLE_PARTITIONS = _cpus()
 
 
 def get_spark(
@@ -36,8 +43,7 @@ def get_spark(
     none — one Python thread + MySQL; see SURVEY.md §4): here the
     knobs are explicit because Spark's planner uses them.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    master = master or os.environ.get("SPARK_MASTER", f"local[{cpus}]")
+    master = master or os.environ.get("SPARK_MASTER", f"local[{_cpus()}]")
     n_shuffle = shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS
 
     builder = (

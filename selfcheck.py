@@ -5,129 +5,102 @@ Runs every ``queries()`` entry and its ``oracle_sql()`` twin at sf0.01
 under a deliberately hostile session (non-UTC timezone), canonicalizes
 both sides the way the driver does — a pandas ``sort_values`` over ALL
 output columns, which also crashes on unhashable (array) cells, the
-round-1 failure mode — and writes ``SELFCHECK_r{N}.json``.
+round-1 failure mode — and writes ``SELFCHECK_{tag}.json``.
 
-Usage: python selfcheck.py [round_tag] [sf_dir]
+Given QUERY names, checks only those (the fast loop while iterating),
+prints the rows only one side has for each FAIL, and writes no JSON.
+Either way the exit status is non-zero when any query FAILs or errors.
+
+Usage: python selfcheck.py [--tag TAG] [--sf-dir DIR] [QUERY ...]
 """
 
 from __future__ import annotations
 
+import argparse
 import json
 import os
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-TABLES = (
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
+from dicomdb_spark.parity import (  # noqa: E402
+    SF_CORRECT,
+    canon_frame as canon,
+    hostile_session,
+    oracle_con,
+    release,
 )
 
 
-def canon(df):
-    """Driver-shaped canonicalization: sorted columns, sorted rows,
-    repr-stringified values (floats kept at full repr precision)."""
-    import pandas as pd  # noqa: F401
-
-    cols = sorted(df.columns)
-    out = df[cols].copy()
-    for c in cols:
-        out[c] = out[c].map(repr)
-    out = out.sort_values(by=cols).reset_index(drop=True)
-    return out
-
-
-def main() -> None:
-    tag = sys.argv[1] if len(sys.argv) > 1 else "rX"
-    sf_dir = sys.argv[2] if len(sys.argv) > 2 else "/root/testdata/sf0.01"
-
-    from pyspark.sql import SparkSession
-
-    spark = (
-        SparkSession.builder.master("local[8]")
-        .appName("selfcheck")
-        .config("spark.sql.session.timeZone", "America/New_York")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.ui.enabled", "false")
-        # 440+ queries share ONE JVM: localCheckpoint blocks from the
-        # iterative queries linger until the driver GC lets the
-        # ContextCleaner reap them, so the default 1g heap OOMs around
-        # query ~400 (r9 run).  A bigger heap + the per-query gc below
-        # keeps the full-registry replay comfortably bounded.  Heap is
-        # env-tunable for smaller hosts (round-9 ADVICE).
-        .config(
-            "spark.driver.memory",
-            os.environ.get("SELFCHECK_DRIVER_MEM", "12g"),
-        )
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-
-    import duckdb
+def check(spark, con, fn, oracle: str | None, name: str, sf_dir: str) -> dict:
+    """One query against its oracle; prints one status line (plus the
+    differing rows on a FAIL) and returns the snapshot entry."""
     import pandas as pd
+
+    try:
+        sdf = fn(spark, sf_dir)
+        s = canon(pd.DataFrame([tuple(r) for r in sdf.collect()], columns=sdf.columns))
+        if oracle is None:
+            print(f"{name}: rows-only ({len(s)})", flush=True)
+            return {"check": "rows_only", "rows": int(len(s)), "match": None}
+        res = con.execute(oracle)
+        d = canon(pd.DataFrame(res.fetchall(), columns=[c[0] for c in res.description]))
+        match = bool(s.equals(d))
+        if match:
+            print(f"{name}: MATCH ({len(s)})", flush=True)
+        else:
+            print(f"{name}: FAIL spark={len(s)} oracle={len(d)}", flush=True)
+            merged = s.merge(d, how="outer", indicator=True)
+            print(merged[merged["_merge"] != "both"].head(6).to_string(), flush=True)
+        return {"check": "oracle", "rows": int(len(s)), "match": match}
+    except Exception as exc:  # must keep going; record the failure
+        err = f"{type(exc).__name__}: {exc}"
+        print(f"{name}: ERROR {err}"[:500], flush=True)
+        return {"check": "error", "rows": -1, "match": False, "err": err[:400]}
+
+
+def main(argv: list[str] | None = None) -> None:
+    ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
+    ap.add_argument("--tag", default="rX", help="names SELFCHECK_{TAG}.json")
+    ap.add_argument("--sf-dir", default=SF_CORRECT)
+    ap.add_argument("queries", nargs="*", help="check only these (no JSON)")
+    args = ap.parse_args(argv)
+    sf_dir = args.sf_dir
+
+    spark = hostile_session("selfcheck")
+    con = oracle_con(sf_dir)
 
     import __spark_entry__ as E
 
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
-
     qs, oracles = E.queries(), E.oracle_sql()
+    names = args.queries or list(qs)
     detail: dict[str, dict] = {}
-    n_fail = 0
-    for name, fn in qs.items():
-        entry: dict = {}
-        try:
-            sdf = fn(spark, sf_dir)
-            spark_pd = pd.DataFrame(
-                [tuple(r) for r in sdf.collect()], columns=sdf.columns
-            )
-            s = canon(spark_pd)
-            if name in oracles:
-                res = con.execute(oracles[name])
-                d = canon(
-                    pd.DataFrame(
-                        res.fetchall(), columns=[c[0] for c in res.description]
-                    )
-                )
-                match = bool(s.equals(d))
-                entry = {"check": "oracle", "rows": int(len(s)), "match": match}
-                if not match:
-                    n_fail += 1
-            else:
-                entry = {"check": "rows_only", "rows": int(len(s)), "match": None}
-        except Exception as exc:  # must keep going; record the failure
-            entry = {"check": "error", "rows": -1, "match": False,
-                     "err": f"{type(exc).__name__}: {exc}"[:400]}
-            n_fail += 1
-        detail[name] = entry
-        status = {True: "MATCH", False: "FAIL", None: "rows-only"}[entry.get("match")]
-        print(f"{name}: {status} ({entry['rows']})", flush=True)
-        # 440 queries in one session: drop each query's tracked pair
-        # caches so storage memory never accumulates across the run,
-        # clear any per-query persists, and nudge the Python GC so the
-        # JVM ContextCleaner can reap dead localCheckpoint RDD blocks
-        from dicomdb_spark.llm.dedup import release_pair_caches
+    for name in names:
+        if name not in qs:
+            print(f"{name}: NOT REGISTERED", flush=True)
+            detail[name] = {"check": "error", "rows": -1, "match": False}
+            continue
+        detail[name] = check(spark, con, qs[name], oracles.get(name), name, sf_dir)
+        release(spark)
 
-        release_pair_caches()
-        spark.catalog.clearCache()
-        import gc
-
-        gc.collect()
-
-    oracle_checked = sum(1 for v in detail.values() if v["check"] == "oracle")
-    out = {
-        "sf": float(sf_dir.rstrip("/").rsplit("sf", 1)[-1]),
-        "queries": len(qs),
-        "oracle_checked": oracle_checked,
-        "all_match": n_fail == 0,
-        "detail": detail,
-    }
-    path = f"SELFCHECK_{tag}.json"
-    with open(path, "w") as fh:
-        json.dump(out, fh, indent=1)
-    print(f"\n{path}: {len(qs)} queries, {oracle_checked} oracle-checked, "
-          f"{'ALL MATCH' if n_fail == 0 else f'{n_fail} FAILURES'}")
+    n_fail = sum(1 for v in detail.values() if v["match"] is False)
+    verdict = "ALL MATCH" if n_fail == 0 else f"{n_fail} FAILURES"
+    if args.queries:
+        print(f"\n{len(names)} queries: {verdict}")
+    else:
+        oracle_checked = sum(1 for v in detail.values() if v["check"] == "oracle")
+        out = {
+            "sf": float(sf_dir.rstrip("/").rsplit("sf", 1)[-1]),
+            "queries": len(qs),
+            "oracle_checked": oracle_checked,
+            "all_match": n_fail == 0,
+            "detail": detail,
+        }
+        path = f"SELFCHECK_{args.tag}.json"
+        with open(path, "w") as fh:
+            json.dump(out, fh, indent=1)
+        print(f"\n{path}: {len(qs)} queries, {oracle_checked} oracle-checked, {verdict}")
+    sys.exit(1 if n_fail else 0)
 
 
 if __name__ == "__main__":

@@ -1,11 +1,13 @@
-"""Adversarial injected-corpus parity regressions (round 12).
+"""Hostile-corpus parity regressions.
 
 Natural corpora mask engine-divergence bug classes behind uniform row
-shapes — every sf0.001+ document is >=120 chars of mostly-ASCII text,
-so per-row list lengths, token counts, and byte==char identities are
-uniform.  These tests pin the queries REPAIRED by the round-12
-adversarial sweep (`adversarial_check.py` at the repo root runs the
-full documents-only registry against the same corpus):
+shapes.  These tests pin the queries REPAIRED by the hostile-corpus
+sweeps; ``adversarial_check.py`` at the repo root runs every query of
+each corpus.  The corpora (``dicomdb_spark.parity.CORPORA``) document
+the bug classes they exposed; each is written into a temp sf-dir, so
+both engines read identical bytes through the real table-load path.
+
+Documents-corpus repairs:
 
 - text_lz76_complexity: DuckDB 1.0.0 list_reduce mis-binds lambda
   outer-column references when list lengths are ragged in a vector
@@ -21,14 +23,10 @@ full documents-only registry against the same corpus):
 """
 from __future__ import annotations
 
-import random
-
-import duckdb
-import pandas as pd
 import pytest
 
+from dicomdb_spark.parity import CORPORA, canon_rows, oracle_con
 from dicomdb_spark.registry._core import ORACLES, QUERIES
-from tests.conftest import patched_load_table
 
 REPAIRED = [
     "text_fingerprint",
@@ -49,111 +47,41 @@ REPAIRED = [
 ]
 
 
-def _corpus() -> pd.DataFrame:
-    rng = random.Random(42)
-    texts = [
-        "a",
-        " ",                           # whitespace-only → zero tokens
-        "   \t  ",
-        "word",
-        "two words",
-        "x" * 300,                     # no-space long
-        "the the the the the the",     # pure repetition
-        "ab" * 100,
-        "Hello, World! 123 456.789",
-        "...!!!???",                   # punct only
-        "0123456789" * 15,
-        "café au lait — naïve résumé",  # multi-byte
-        "日本語のテキストです。",         # CJK
-        "mixed ascii y café",
-        "a b c d e f g h i j k l m n o p q r s t u v w x y z",
-        "The quick brown fox jumps over the lazy dog. " * 8,
-    ]
-    texts += [
-        " ".join(
-            rng.choice(["alpha", "beta", "gamma", "delta", "x", "42", "—"])
-            for _ in range(rng.randint(1, 40))
-        )
-        for _ in range(24)
-    ]
-    langs = ["en", "es", "de", "zh", "fr"]
-    srcs = ["src0", "src1", "src2"]
-    pdf = pd.DataFrame(
-        {
-            "doc_id": range(1, len(texts) + 1),
-            "text": texts,
-            "lang": [langs[i % 5] for i in range(len(texts))],
-            "source": [srcs[i % 3] for i in range(len(texts))],
-            "n_chars": [len(t) for t in texts],
-        }
-    )
-    # NULL-bearing rows (r13 probe): null text/lang/source/n_chars
-    nulls = pd.DataFrame(
-        {
-            "doc_id": [len(texts) + 1, len(texts) + 2, len(texts) + 3],
-            "text": [None, "null text neighbor doc", None],
-            "lang": ["en", None, "de"],
-            "source": ["src0", "src1", None],
-            "n_chars": pd.array([None, 22, None], dtype="Int64"),
-        }
-    )
-    pdf = pd.concat([pdf, nulls], ignore_index=True)
-    pdf["n_chars"] = pdf["n_chars"].astype("Int64")
-    return pdf
-
-
-def _norm(rows, cols):
-    order = sorted(range(len(cols)), key=lambda i: cols[i])
-    return sorted(tuple(repr(r[i]) for i in order) for r in rows)
-
-
 @pytest.fixture(scope="module")
-def adversarial(spark, tmp_path_factory):
-    # parquet injection, not createDataFrame: Spark converts a pandas
-    # nullable Int64 column to DOUBLE on createDataFrame (false-flags
-    # every n_chars consumer); parquet yields int64 in BOTH engines
-    import pyarrow as pa
-    import pyarrow.parquet as pq
+def corpus(tmp_path_factory):
+    """``corpus(name, ...)`` -> (sf_dir, oracle connection) holding those
+    corpora, written once per module."""
+    made = {}
 
-    pdf = _corpus()
-    tmp = str(tmp_path_factory.mktemp("adversarial_docs_sfdir"))
-    schema = pa.schema([("doc_id", pa.int64()), ("text", pa.string()),
-                        ("lang", pa.string()), ("source", pa.string()),
-                        ("n_chars", pa.int64())])
-    pq.write_table(pa.Table.from_pandas(pdf, schema=schema, preserve_index=False),
-                   f"{tmp}/documents.parquet", version="2.6")
-    docs = spark.read.parquet(f"{tmp}/documents.parquet")
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW documents AS SELECT * FROM '{tmp}/documents.parquet'"
-    )
-    return docs, con
+    def get(*names):
+        if names not in made:
+            sf_dir = str(tmp_path_factory.mktemp("_".join(names)))
+            tables = [t for n in names for t in CORPORA[n](sf_dir)]
+            made[names] = (sf_dir, oracle_con(sf_dir, tables))
+        return made[names]
+
+    return get
+
+
+def _check(spark, sf_dir, con, name):
+    sdf = QUERIES[name](spark, sf_dir)
+    s = canon_rows([tuple(r) for r in sdf.collect()], sdf.columns)
+    res = con.execute(ORACLES[name])
+    d = canon_rows(res.fetchall(), [c[0] for c in res.description])
+    assert s == d, f"{name}: {len(s)} spark rows vs {len(d)} oracle rows"
+    return s
 
 
 @pytest.mark.parametrize("name", REPAIRED)
-def test_adversarial_parity(spark, adversarial, name):
-    docs, con = adversarial
-
-    def fake_load(spark_, sf_dir_, table):
-        assert table == "documents"
-        return docs
-
-    with patched_load_table(fake_load):
-        sdf = QUERIES[name](spark, "unused")
-        s = _norm([tuple(r) for r in sdf.collect()], sdf.columns)
-    res = con.execute(ORACLES[name])
-    d = _norm(res.fetchall(), [c[0] for c in res.description])
-    assert s == d, f"{name}: {len(s)} spark rows vs {len(d)} oracle rows"
+def test_adversarial_parity(spark, corpus, name):
+    s = _check(spark, *corpus("documents"), name)
     assert len(s) > 0 or name in ("dedup_fingerprint",)
 
 
 # ---------------------------------------------------------------------------
-# Events-table adversarial regressions: the queries repaired by the
-# round-12 degenerate-events sweep (adversarial_check_events.py runs
-# the full 218-query events-only registry).  Injection goes through a
-# TEMP PARQUET sf-dir so load_table's NTZ normalization runs — both
-# engines read identical bytes (createDataFrame would shift naive
-# timestamps through the session timezone and false-flag everything).
+# Events-corpus repairs: missing event-type filter, negative-residue
+# round trip, DECIMAL 1-ULP drift, ANSI divide-by-zero on degenerate
+# groups, int64-headroom moment kernels and NULL ordering.
 # ---------------------------------------------------------------------------
 
 EVENTS_REPAIRED = [
@@ -184,89 +112,15 @@ EVENTS_REPAIRED = [
 ]
 
 
-def _events_corpus() -> pd.DataFrame:
-    import datetime as dt
-
-    rng = random.Random(99)
-    rows = []
-
-    def add(ts, user, etype, value, props='{"k": 1}'):
-        rows.append((len(rows), ts, user, etype, value, props))
-
-    add(dt.datetime(2024, 2, 1, 12, 0, 0), 1, "lonely", 5.0)
-    for i in range(10):
-        add(dt.datetime(2024, 1, 1 + i, 9, 30, 0), 2, "constant", 7.25)
-    base = dt.datetime(2024, 3, 5, 0, 0, 0)
-    for i in range(12):
-        add(base + dt.timedelta(seconds=i // 3), 3, "burst", float(i))
-    for i in range(8):
-        add(dt.datetime(2024, 4, 1 + i, 23, 59, 59), 4, "extreme",
-            [-100.5, 0.0, 99999.99, -0.01, 3.0, 1 / 3, -50000.0, 2.5][i])
-    for h in (0, 1, 2, 3, 4):
-        add(dt.datetime(2024, 3, 10, h, 30, 0), 5, "dst", float(h))
-        add(dt.datetime(2024, 11, 3, h, 30, 0), 5, "dst", float(h) + 10)
-    add(dt.datetime(2024, 5, 1, 0, 0, 0), 6, "midnight", 1.0)
-    # constant EVAL-window series (ADVICE r12): calibration rows before
-    # 2024-01-16 plus an all-constant tail after — w_cpk's sig_eval
-    # becomes exactly 0.0 and cp/cpk must NULL identically
-    for i, v in enumerate([10.0, 20.0, 30.0]):
-        add(dt.datetime(2024, 1, 5 + i, 8, 0, 0), 10, "cpk_const_eval", v)
-    for i in range(5):
-        add(dt.datetime(2024, 1, 20 + i, 8, 0, 0), 10, "cpk_const_eval", 42.42)
-    for i in range(20):
-        add(dt.datetime(2024, 6, 1 + i % 5, 10 + i % 3, 0, 0), 7 + i % 2,
-            "tie_a" if i % 2 else "tie_b", 50.0)
-    for i in range(40):
-        add(dt.datetime(2024, 7, 1, 0, 0, 0)
-            + dt.timedelta(minutes=rng.randint(0, 60 * 24 * 30)),
-            rng.randint(1, 9), "normal", round(rng.uniform(-50, 500), 2),
-            '{"k": %d}' % rng.randint(0, 99))
-    # NULL-bearing series (r13): alternating NULL values + one NULL
-    # props — real feeds contain them; rank/median/count kernels must
-    # exclude or propagate NULL identically in both engines
-    for i in range(6):
-        add(dt.datetime(2024, 8, 1 + i, 12, 0, 0), 11, "nullmix",
-            None if i % 2 else float(10 * i),
-            None if i == 4 else '{"k": %d}' % i)
-    pdf = pd.DataFrame(
-        rows, columns=["event_id", "ts", "user_id", "event_type", "value", "props"]
-    )
-    pdf["ts"] = pd.to_datetime(pdf["ts"])
-    return pdf
-
-
-@pytest.fixture(scope="module")
-def adversarial_events(spark, tmp_path_factory):
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    pdf = _events_corpus()
-    tmp = str(tmp_path_factory.mktemp("adversarial_sfdir"))
-    pq.write_table(pa.Table.from_pandas(pdf, preserve_index=False),
-                   f"{tmp}/events.parquet", version="2.6")
-    con = duckdb.connect()
-    con.execute(f"CREATE VIEW events AS SELECT * FROM '{tmp}/events.parquet'")
-    return tmp, con
-
-
 @pytest.mark.parametrize("name", EVENTS_REPAIRED)
-def test_adversarial_events_parity(spark, adversarial_events, name):
-    sf_dir, con = adversarial_events
-    sdf = QUERIES[name](spark, sf_dir)
-    s = _norm([tuple(r) for r in sdf.collect()], sdf.columns)
-    res = con.execute(ORACLES[name])
-    d = _norm(res.fetchall(), [c[0] for c in res.description])
-    assert s == d, f"{name}: {len(s)} spark rows vs {len(d)} oracle rows"
+def test_adversarial_events_parity(spark, corpus, name):
+    _check(spark, *corpus("events"), name)
 
 
 # ---------------------------------------------------------------------------
-# Embeddings-table adversarial regressions: the queries repaired by the
-# round-12 zero-vector/duplicate-seed sweep
-# (adversarial_check_embeddings.py runs the full embeddings-only
-# registry).  The corpus deliberately includes duplicate k-means SEEDS
-# (vec_id < 8 holds identical pairs) so round-0 clusters empty — the
-# case that exposed cid renumbering — plus zero-norm vectors for every
-# cosine path.
+# Embeddings-corpus repairs: duplicate k-means SEEDS (vec_id < 8 holds
+# identical pairs, so round-0 clusters empty — the case that exposed
+# cid renumbering) plus zero-norm vectors for every cosine path.
 # ---------------------------------------------------------------------------
 
 EMB_REPAIRED = [
@@ -282,164 +136,19 @@ EMB_REPAIRED = [
 ]
 
 
-def _emb_corpus():
-    import numpy as np
-
-    rng = np.random.RandomState(7)
-    D = 64
-    vecs, labels = [], []
-    vecs.append(np.zeros(D)); labels.append(0)
-    vecs.append(np.zeros(D)); labels.append(1)          # duplicate zero seed
-    v = np.ones(D); vecs.append(v); labels.append(2)
-    vecs.append(v.copy()); labels.append(2)             # duplicate ones seed
-    vecs.append(-v); labels.append(3)
-    e0 = np.zeros(D); e0[0] = 1.0
-    vecs.append(e0); labels.append(4)
-    vecs.append(e0 * 10.0); labels.append(4)
-    vecs.append(e0 * 1e-6); labels.append(4)
-    for i in range(40):
-        vecs.append(rng.randn(D)); labels.append(int(i % 7))
-    for i in range(10):
-        vecs.append(v + rng.randn(D) * 1e-9); labels.append(8)
-    embs = [[float(np.float32(t)) for t in x] for x in vecs]
-    # NULL-bearing rows (r13 probe): NULL embedding / NULL label
-    embs.append(None); labels.append(9)
-    embs.append([float(np.float32(t)) for t in rng.randn(D)])
-    labels.append(None)
-    return embs, labels
-
-
-@pytest.fixture(scope="module")
-def adversarial_embeddings(spark, tmp_path_factory):
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    embs, labels = _emb_corpus()
-    tmp = str(tmp_path_factory.mktemp("adversarial_emb_sfdir"))
-    # arrow arrays built directly: pandas->arrow chokes converting a
-    # None list cell inside an object column of ndarrays
-    tbl = pa.table({
-        "vec_id": pa.array(range(len(embs)), pa.int64()),
-        "embedding": pa.array(embs, pa.list_(pa.float32())),
-        "label": pa.array(labels, pa.int32()),
-    })
-    pq.write_table(tbl, f"{tmp}/embeddings.parquet", version="2.6")
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW embeddings AS SELECT * FROM '{tmp}/embeddings.parquet'"
-    )
-    return tmp, con
-
-
 @pytest.mark.parametrize("name", EMB_REPAIRED)
-def test_adversarial_embeddings_parity(spark, adversarial_embeddings, name):
-    sf_dir, con = adversarial_embeddings
-    sdf = QUERIES[name](spark, sf_dir)
-    s = _norm([tuple(r) for r in sdf.collect()], sdf.columns)
-    res = con.execute(ORACLES[name])
-    d = _norm(res.fetchall(), [c[0] for c in res.description])
-    assert s == d, f"{name}: {len(s)} spark rows vs {len(d)} oracle rows"
+def test_adversarial_embeddings_parity(spark, corpus, name):
+    _check(spark, *corpus("embeddings"), name)
 
 
-# ---------------------------------------------------------------------------
-# TPC-H-table adversarial regressions: the queries repaired by the
-# round-12 degenerate-TPC-H sweep (adversarial_check_tpch.py runs the
-# full 123-query family over real sf0.001 tables augmented with
-# childless dims, zero-quantity lineitems and zero-price orders).
-# ---------------------------------------------------------------------------
-
-TPCH_REPAIRED = ["tpch_q2_shape", "a_price_elasticity_ols"]
+# TPC-H-corpus repairs: zero-quantity lineitems divided by l_quantity.
+@pytest.mark.parametrize("name", ["tpch_q2_shape", "a_price_elasticity_ols"])
+def test_adversarial_tpch_parity(spark, corpus, name):
+    _check(spark, *corpus("tpch"), name)
 
 
-@pytest.fixture(scope="module")
-def adversarial_tpch(spark, tmp_path_factory):
-    tmp = str(tmp_path_factory.mktemp("adversarial_tpch_sfdir"))
-    src = "/root/testdata/sf0.001"
-    build = duckdb.connect()
-
-    def write(table, extra_sql=""):
-        q = f"SELECT * FROM '{src}/{table}.parquet'"
-        if extra_sql:
-            q += f" UNION ALL {extra_sql}"
-        build.execute(f"COPY ({q}) TO '{tmp}/{table}.parquet' (FORMAT PARQUET)")
-
-    write("region", "SELECT CAST(99 AS INTEGER), ''")
-    write("nation", "SELECT CAST(98 AS INTEGER), 'GHOSTLAND', CAST(0 AS INTEGER)")
-    write("customer", """
-      SELECT CAST(999901 AS BIGINT), 'childless customer', CAST(98 AS INTEGER),
-             CAST(0.0 AS DOUBLE), 'BUILDING'
-      UNION ALL
-      SELECT CAST(999902 AS BIGINT), '', CAST(0 AS INTEGER),
-             CAST(-999.99 AS DOUBLE), 'AUTOMOBILE'""")
-    write("supplier",
-          "SELECT CAST(999903 AS BIGINT), 'childless supplier', CAST(98 AS INTEGER), CAST(0.0 AS DOUBLE)")
-    write("part",
-          "SELECT CAST(999904 AS BIGINT), 'childless part', 'Brand#99', 'ECONOMY ANODIZED GHOST', CAST(0 AS INTEGER), CAST(0.0 AS DOUBLE)")
-    write("orders", """
-      SELECT CAST(9999905 AS BIGINT), CAST(999902 AS BIGINT), 'F',
-             CAST(0.0 AS DOUBLE), TIMESTAMP '1992-01-01 00:00:00', '1-URGENT'
-      UNION ALL
-      SELECT CAST(9999906 AS BIGINT), CAST(999902 AS BIGINT), 'O',
-             CAST(0.01 AS DOUBLE), TIMESTAMP '1992-01-01 00:00:00', '5-LOW'""")
-    write("lineitem", """
-      SELECT CAST(9999906 AS BIGINT), CAST(999904 AS BIGINT), CAST(999903 AS BIGINT),
-             CAST(1 AS INTEGER), CAST(0.0 AS DOUBLE), CAST(0.0 AS DOUBLE),
-             CAST(0.0 AS DOUBLE), CAST(0.0 AS DOUBLE), 'R', 'F',
-             TIMESTAMP '1992-01-01 00:00:00'
-      UNION ALL
-      SELECT CAST(9999906 AS BIGINT), CAST(999904 AS BIGINT), CAST(999903 AS BIGINT),
-             CAST(2 AS INTEGER), CAST(50.0 AS DOUBLE), CAST(104949.5 AS DOUBLE),
-             CAST(0.1 AS DOUBLE), CAST(0.08 AS DOUBLE), 'N', 'O',
-             TIMESTAMP '1992-01-01 00:00:00'""")
-    con = duckdb.connect()
-    for t in ["region", "nation", "customer", "supplier", "part",
-              "orders", "lineitem"]:
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{tmp}/{t}.parquet'")
-    return tmp, con
-
-
-@pytest.mark.parametrize("name", TPCH_REPAIRED)
-def test_adversarial_tpch_parity(spark, adversarial_tpch, name):
-    sf_dir, con = adversarial_tpch
-    sdf = QUERIES[name](spark, sf_dir)
-    s = _norm([tuple(r) for r in sdf.collect()], sdf.columns)
-    res = con.execute(ORACLES[name])
-    d = _norm(res.fetchall(), [c[0] for c in res.description])
-    assert s == d, f"{name}: {len(s)} spark rows vs {len(d)} oracle rows"
-
-
-# ---------------------------------------------------------------------------
 # Cross-family (documents + embeddings) — completes adversarial
-# coverage of all 521 registry queries across the four sweeps.
-# ---------------------------------------------------------------------------
-
-
-@pytest.fixture(scope="module")
-def adversarial_cross(spark, tmp_path_factory):
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    tmp = str(tmp_path_factory.mktemp("adversarial_cross_sfdir"))
-    pq.write_table(pa.Table.from_pandas(_corpus(), preserve_index=False),
-                   f"{tmp}/documents.parquet", version="2.6")
-    embs, labels = _emb_corpus()
-    tbl = pa.table({
-        "vec_id": pa.array(range(len(embs)), pa.int64()),
-        "embedding": pa.array(embs, pa.list_(pa.float32())),
-        "label": pa.array(labels, pa.int32()),
-    })
-    pq.write_table(tbl, f"{tmp}/embeddings.parquet", version="2.6")
-    con = duckdb.connect()
-    for t in ("documents", "embeddings"):
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{tmp}/{t}.parquet'")
-    return tmp, con
-
-
+# coverage of all 521 registry queries across the four corpora.
 @pytest.mark.parametrize("name", ["ann_rerank_topk", "ml_knn_classify"])
-def test_adversarial_cross_parity(spark, adversarial_cross, name):
-    sf_dir, con = adversarial_cross
-    sdf = QUERIES[name](spark, sf_dir)
-    s = _norm([tuple(r) for r in sdf.collect()], sdf.columns)
-    res = con.execute(ORACLES[name])
-    d = _norm(res.fetchall(), [c[0] for c in res.description])
-    assert s == d, f"{name}: {len(s)} spark rows vs {len(d)} oracle rows"
+def test_adversarial_cross_parity(spark, corpus, name):
+    _check(spark, *corpus("documents", "embeddings"), name)

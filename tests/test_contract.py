@@ -12,6 +12,14 @@ sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 import __spark_entry__ as entry_mod
 from dicomdb_spark.operators.joins import merge_classify
+from dicomdb_spark.parity import (
+    CORPORA,
+    SF_CORRECT,
+    SF_SMOKE,
+    canon_frame,
+    canon_rows,
+    oracle_con,
+)
 
 
 def test_entry_smoke(spark):
@@ -136,15 +144,8 @@ def test_oracle_dtype_parity(spark):
 
     Cheap: Spark schemas are lazy (no execution), DuckDB uses LIMIT 0.
     """
-    import duckdb
-
     qs, os_ = entry_mod.queries(), entry_mod.oracle_sql()
-    con = duckdb.connect()
-    for t in ["region", "nation", "customer", "supplier", "part", "orders",
-              "lineitem", "events", "documents", "embeddings"]:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM '/root/testdata/sf0.001/{t}.parquet'"
-        )
+    con = oracle_con(SF_SMOKE)
     problems = []
     for name, sql in os_.items():
         duck = {
@@ -153,7 +154,7 @@ def test_oracle_dtype_parity(spark):
                 f"DESCRIBE SELECT * FROM ({sql}) LIMIT 0"
             ).fetchall()
         }
-        sdf = qs[name](spark, "/root/testdata/sf0.001")
+        sdf = qs[name](spark, SF_SMOKE)
         sparkt = {f.name: f.dataType.simpleString() for f in sdf.schema.fields}
         if set(duck) != set(sparkt):
             problems.append((name, "column-set", sorted(duck), sorted(sparkt)))
@@ -183,3 +184,87 @@ def test_merge_classify_self_is_noop(spark):
         float_cols=["c_acctbal"],
     )
     assert out.filter(out.action != "noop").count() == 0
+
+
+# ---------------------------------------------------------------------------
+# Oracle-parity harness (dicomdb_spark/parity.py)
+# ---------------------------------------------------------------------------
+
+
+def test_canon_rows_rule():
+    """NaN -> "NaN", None -> "None", lists and tuples -> list repr,
+    everything else repr; columns by name; rows sorted."""
+    nan = float("nan")
+    cols = ["e", "a", "d", "b", "c"]
+    rows = [(5, nan, [1.0, nan], None, ("x", 2)), (4, 0.1, [], "s", [])]
+    want = [("0.1", "'s'", "[]", "[]", "4"),
+            ("NaN", "None", "['x', 2]", "[1.0, nan]", "5")]
+    assert canon_rows(rows, cols) == want
+    # column order is irrelevant: permute columns and values together
+    perm = [3, 0, 4, 2, 1]
+    assert canon_rows([tuple(r[i] for i in perm) for r in rows],
+                      [cols[i] for i in perm]) == want
+
+
+def test_selfcheck_exports_canon_frame():
+    """perfbench/queries.py does ``from selfcheck import canon``."""
+    import selfcheck
+
+    assert selfcheck.canon is canon_frame
+
+
+@pytest.mark.parametrize("corpus", sorted(CORPORA))
+def test_corpus_writer_is_deterministic(corpus, tmp_path_factory):
+    import pyarrow.parquet as pq
+
+    def rows(sf_dir, t):
+        tbl = pq.read_table(f"{sf_dir}/{t}.parquet")
+        return canon_rows(list(zip(*(c.to_pylist() for c in tbl.columns))),
+                          tbl.column_names)
+
+    a, b = (str(tmp_path_factory.mktemp(corpus)) for _ in range(2))
+    tables = CORPORA[corpus](a)
+    assert CORPORA[corpus](b) == tables
+    for t in tables:
+        assert rows(a, t) and rows(a, t) == rows(b, t), t
+
+
+@pytest.mark.parametrize("corpus", sorted(CORPORA))
+def test_corpus_writer_matches_contract_dtypes(corpus, tmp_path):
+    """An injected corpus must carry the column names and Arrow types
+    of the testdata table it stands in for."""
+    import pyarrow.parquet as pq
+
+    for t in CORPORA[corpus](str(tmp_path)):
+        got = pq.read_schema(tmp_path / f"{t}.parquet")
+        want = pq.read_schema(f"{SF_CORRECT}/{t}.parquet")
+        assert [(f.name, f.type) for f in got] == [(f.name, f.type) for f in want], t
+
+
+def test_selfcheck_exits_nonzero_on_failure(spark, monkeypatch, tmp_path):
+    """selfcheck is a gate: a FAIL in full or named mode must exit
+    non-zero, and an all-MATCH run zero."""
+    import json
+
+    import selfcheck
+
+    oracle = "SELECT range AS id FROM range(2)"
+    monkeypatch.setattr(selfcheck, "hostile_session", lambda app: spark)
+    monkeypatch.setattr(entry_mod, "queries", lambda: {
+        "good": lambda s, sf: s.range(2), "bad": lambda s, sf: s.range(3),
+    })
+    monkeypatch.setattr(entry_mod, "oracle_sql",
+                        lambda: {"good": oracle, "bad": oracle})
+    monkeypatch.chdir(tmp_path)
+
+    def exit_code(*argv):
+        with pytest.raises(SystemExit) as stop:
+            selfcheck.main(list(argv))
+        return stop.value.code
+
+    assert exit_code("--tag", "t") == 1
+    detail = json.loads((tmp_path / "SELFCHECK_t.json").read_text())["detail"]
+    assert detail["good"]["match"] is True and detail["bad"]["match"] is False
+    assert exit_code("bad") == 1
+    assert exit_code("good") == 0
+    assert exit_code("unregistered") == 1

@@ -6,6 +6,7 @@ from __future__ import annotations
 import datetime as dt
 import os
 import tempfile
+from pathlib import Path
 
 import pytest
 
@@ -1485,15 +1486,45 @@ def test_cut_lineage_modes(spark, tmp_path, monkeypatch):
     assert "Scan ExistingRDD" in cut._jdf.queryExecution().executedPlan().toString()
     assert [r.v for r in cut.orderBy("id").limit(3).collect()] == [3, 5, 7]
 
-    # reliable mode: checkpoint() into the env-pointed directory
+    # reliable mode: checkpoint() into the env-pointed directory; the
+    # SparkContext is shared, so its checkpoint dir (set on first use)
+    # is put back before tmp_path disappears
+    sc = spark.sparkContext
+    before = sc.getCheckpointDir()
     ck = tmp_path / "reliable_ck"
     monkeypatch.setenv("SPARK_GRAFT_CHECKPOINT_DIR", str(ck))
-    cut2 = cut_lineage(chained)
-    assert [r.v for r in cut2.orderBy("id").limit(3).collect()] == [3, 5, 7]
-    assert spark.sparkContext.getCheckpointDir() is not None
-    import os
+    try:
+        cut2 = cut_lineage(chained)
+        assert [r.v for r in cut2.orderBy("id").limit(3).collect()] == [3, 5, 7]
+        assert sc.getCheckpointDir() is not None
+        import os
 
-    assert any(os.scandir(ck)), "reliable checkpoint dir not written"
+        assert any(os.scandir(ck)), "reliable checkpoint dir not written"
+    finally:
+        getattr(sc._jsc.sc(), "checkpointDir_$eq")(sc._jvm.scala.Option.apply(before))
+    assert sc.getCheckpointDir() == before
+
+
+def test_session_cpu_fallback():
+    """Without SPARK_GRAFT_CPUS the session sizes itself to the CPUs the
+    process may use (nproc), not a fixed 32."""
+    import subprocess
+    import sys
+
+    probe = ("from dicomdb_spark import session as s; "
+             "print(s._cpus(), s.DEFAULT_SHUFFLE_PARTITIONS)")
+    env = {k: v for k, v in os.environ.items() if k != "SPARK_GRAFT_CPUS"}
+
+    def run():
+        return subprocess.run(
+            [sys.executable, "-c", probe], env=env, check=True, text=True,
+            capture_output=True, cwd=Path(__file__).resolve().parents[1],
+        ).stdout.split()
+
+    n = str(len(os.sched_getaffinity(0)))
+    assert run() == [n, n]
+    env["SPARK_GRAFT_CPUS"] = "3"
+    assert run() == ["3", "3"]
 
 
 def test_bucket_pair_dots_topk_prune_matches_window(spark):

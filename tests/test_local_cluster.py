@@ -21,12 +21,11 @@ from __future__ import annotations
 
 import subprocess
 import sys
+from pathlib import Path
 
 import pytest
 
 _SCRIPT = r"""
-import sys
-sys.path.insert(0, "/root/repo")
 from pyspark.sql import SparkSession
 spark = (SparkSession.builder.master("local-cluster[2,2,1536]")
          .appName("mjvm_check")
@@ -36,25 +35,16 @@ spark = (SparkSession.builder.master("local-cluster[2,2,1536]")
          .config("spark.sql.execution.arrow.pyspark.enabled", "true")
          .config("spark.ui.enabled", "false").getOrCreate())
 spark.sparkContext.setLogLevel("ERROR")
+from dicomdb_spark.parity import SF_SMOKE, canon_rows, oracle_con
 from dicomdb_spark.registry import QUERIES, ORACLES
-import duckdb
-con = duckdb.connect()
-SF = "/root/testdata/sf0.001"
-for t in ("region", "nation", "customer", "supplier", "part", "orders",
-          "lineitem", "events", "documents", "embeddings"):
-    con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{SF}/{t}.parquet'")
-
-def norm(rows, cols):
-    order = sorted(range(len(cols)), key=lambda i: cols[i])
-    return sorted(tuple(repr(r[i]) for i in order) for r in rows)
-
+con = oracle_con(SF_SMOKE)
 names = ["j1_exam_series_revenue", "dedup_exact", "w2_keep_latest",
          "u3_stack_assembly", "dedup_minhash_lsh"]
 for name in names:
-    sdf = QUERIES[name](spark, SF)
-    s = norm([tuple(r) for r in sdf.collect()], sdf.columns)
+    sdf = QUERIES[name](spark, SF_SMOKE)
+    s = canon_rows([tuple(r) for r in sdf.collect()], sdf.columns)
     res = con.execute(ORACLES[name])
-    d = norm(res.fetchall(), [c[0] for c in res.description])
+    d = canon_rows(res.fetchall(), [c[0] for c in res.description])
     print(name, "OK" if s == d and len(s) > 0 else "FAIL", flush=True)
 spark.stop()
 print("DONE", flush=True)
@@ -64,6 +54,7 @@ print("DONE", flush=True)
 def test_queries_match_oracles_on_multi_jvm_cluster():
     proc = subprocess.run(
         [sys.executable, "-c", _SCRIPT],
+        cwd=Path(__file__).resolve().parents[1],
         capture_output=True,
         text=True,
         timeout=420,

@@ -1,75 +1,27 @@
 """Local twin of the driver's correctness gate.
 
 For every (query, oracle) pair: run the Spark query and the DuckDB SQL
-at sf0.01, normalize (columns sorted by name, rows sorted by all
-values), and compare values exactly.  This is intentionally *stricter*
-than a tolerance check — the engine's queries are designed for
-bitwise determinism (see registry.py docstring).
+at sf0.01, normalize (``parity.canon_rows``: columns sorted by name,
+rows sorted by all values), and compare values exactly.  This is
+intentionally *stricter* than a tolerance check — the engine's queries
+are designed for bitwise determinism (see registry.py docstring).
 """
 
 from __future__ import annotations
 
-import math
-
-import duckdb
 import pytest
 
+from dicomdb_spark.parity import SF_CORRECT, canon_rows, oracle_con
 from dicomdb_spark.registry import ORACLES, QUERIES
-
-SF_DIR = "/root/testdata/sf0.01"
-TABLES = (
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-)
-
-
-def duck_con():
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM '{SF_DIR}/{t}.parquet'"
-        )
-    return con
-
-
-def normalize(rows, columns):
-    """Sort columns by name, then rows by stringified values."""
-    order = sorted(range(len(columns)), key=lambda i: columns[i])
-    out = []
-    for row in rows:
-        vals = []
-        for i in order:
-            v = row[i]
-            if isinstance(v, float):
-                if math.isnan(v):
-                    v = "NaN"
-                else:
-                    v = repr(v)
-            elif isinstance(v, (list, tuple)):
-                v = repr(list(v))
-            else:
-                v = repr(v)
-            vals.append(v)
-        out.append(tuple(vals))
-    out.sort()
-    return [c for _, c in sorted(zip(range(len(columns)), columns), key=lambda p: columns[p[0]])], out
 
 
 @pytest.mark.parametrize("name", sorted(ORACLES))
 def test_parity(spark, name):
-    sdf = QUERIES[name](spark, SF_DIR)
+    sdf = QUERIES[name](spark, SF_CORRECT)
     spark_rows = [tuple(r) for r in sdf.collect()]
     spark_cols = sdf.columns
 
-    con = duck_con()
+    con = oracle_con(SF_CORRECT)
     res = con.execute(ORACLES[name])
     duck_cols = [d[0] for d in res.description]
     duck_rows = res.fetchall()
@@ -81,8 +33,8 @@ def test_parity(spark, name):
     assert len(spark_rows) == len(duck_rows), (
         f"{name}: row count {len(spark_rows)} vs {len(duck_rows)}"
     )
-    _, s_norm = normalize(spark_rows, spark_cols)
-    _, d_norm = normalize(duck_rows, duck_cols)
+    s_norm = canon_rows(spark_rows, spark_cols)
+    d_norm = canon_rows(duck_rows, duck_cols)
     mismatches = [
         (a, b) for a, b in zip(s_norm, d_norm) if a != b
     ]
