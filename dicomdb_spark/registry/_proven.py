@@ -429,12 +429,18 @@ ENGINE_MODULES_ACK: dict[str, tuple[str, ...]] = {
     # run in workers without the package on their path); no registry
     # query calls it — covered by the JDBC round-trip tests
     "dicomdb_spark/sources/jdbc.py": (),
+    # same by-value registration for the xlsx reader's pandas UDF
+    "dicomdb_spark/sources/xlsx.py": ("s4_xlsx_roundtrip",),
+    # Python worker daemon of local sessions (stat-checked zip cache);
+    # no query calls it and no plan changes
+    "dicomdb_spark/worker_daemon.py": (),
     # the oracle-parity harness (DuckDB views, canons, hostile corpora)
     # that selfcheck, the sweep and the parity tests share; no registry
     # query imports it
     "dicomdb_spark/parity.py": (),
     # local[N]/shuffle-partition fallback is the process's CPU count
-    # when SPARK_GRAFT_CPUS is unset; query semantics unchanged
+    # when SPARK_GRAFT_CPUS is unset; local masters select the worker
+    # daemon; reliable checkpoints are cleaned; query semantics unchanged
     "dicomdb_spark/session.py": (),
     # r13 optimization: repetition_stats arrays materialized once in a
     # stacked projection (interpreted HOFs get no CSE; each dup
@@ -555,6 +561,8 @@ MODIFIED_SINCE_PROVEN: tuple[str, ...] = (
     # tercile split (4 consumers re-ran the bigram LM pipeline) —
     # oracle-rechecked at sf0.01 when landed
     "text_ccnet_buckets",
+    # sources/xlsx.py registers for by-value UDF pickling
+    "s4_xlsx_roundtrip",
 )
 
 

@@ -13,6 +13,9 @@ a 1000-executor cluster:
   DuckDB-oracle comparison sound — DuckDB timestamps are UTC-naive).
 * Arrow enabled for every pandas interchange (Pandas UDFs,
   ``toPandas``): vectorized, batch-at-a-time transfer.
+* ``local``/``local[N]`` masters fork Python workers from
+  ``dicomdb_spark.worker_daemon``, which stops each task from
+  re-reading the Spark jar and ``pyspark.zip`` (see that module).
 """
 
 from __future__ import annotations
@@ -31,6 +34,64 @@ def _cpus() -> int:
 DEFAULT_SHUFFLE_PARTITIONS = _cpus()
 
 
+# the repo root: Python workers import ``dicomdb_spark.worker_daemon``
+# from here whatever the driver's cwd
+_PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def is_local_master(master: str) -> bool:
+    """'local' / 'local[N]' only — NOT 'local-cluster[...]', which is a
+    multi-JVM test cluster and must behave like a real one."""
+    return master == "local" or master.startswith("local[")
+
+
+def session_conf(
+    master: str,
+    shuffle_partitions: int,
+    extra_conf: dict[str, str] | None = None,
+) -> dict[str, str]:
+    """The Spark conf ``get_spark`` builds for ``master``.
+
+    On local masters the Python workers come from
+    ``dicomdb_spark.worker_daemon`` (``pyspark.daemon`` without the
+    per-task zip-archive re-reads), and the package root is appended to
+    the workers' PYTHONPATH, after any caller value.  Other masters keep
+    the stock daemon, so executors never need the package.
+    """
+    conf = {
+        "spark.sql.shuffle.partitions": str(shuffle_partitions),
+        "spark.sql.adaptive.enabled": "true",
+        "spark.sql.adaptive.coalescePartitions.enabled": "true",
+        "spark.sql.adaptive.skewJoin.enabled": "true",
+        # AQE coalescing targets bytes-per-partition, but the text/
+        # dedup operators do ~50× more CPU per shuffle byte (md5 over
+        # exploded n-grams), so the default 1 MB floor serializes
+        # CPU-bound stages on small inputs.  A 64 KB floor restores
+        # parallelism there and never binds at real shuffle volumes
+        # (totalSize/parallelism >> 64 KB on any 100 TB-scale stage).
+        "spark.sql.adaptive.coalescePartitions.minPartitionSize": "64k",
+        "spark.sql.session.timeZone": "UTC",
+        "spark.sql.execution.arrow.pyspark.enabled": "true",
+        "spark.sql.parquet.filterPushdown": "true",
+        "spark.driver.memory": os.environ.get("SPARK_DRIVER_MEM", "8g"),
+        "spark.ui.enabled": "false",
+        # Broadcast threshold: dimension tables (region/nation/...) are
+        # tiny at any SF; let Catalyst broadcast them rather than
+        # shuffling the fact side.
+        "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
+    }
+    if os.environ.get("SPARK_GRAFT_CHECKPOINT_DIR"):
+        # reliable cut_lineage checkpoints: delete a round's files once
+        # its RDD is garbage-collected, not at the end of the run
+        conf["spark.cleaner.referenceTracking.cleanCheckpoints"] = "true"
+    conf.update(extra_conf or {})
+    if is_local_master(master):
+        conf["spark.python.daemon.module"] = "dicomdb_spark.worker_daemon"
+        key = "spark.executorEnv.PYTHONPATH"
+        conf[key] = os.pathsep.join(p for p in (conf.get(key), _PACKAGE_ROOT) if p)
+    return conf
+
+
 def get_spark(
     app_name: str = "dicomdb_spark",
     master: str | None = None,
@@ -46,33 +107,9 @@ def get_spark(
     master = master or os.environ.get("SPARK_MASTER", f"local[{_cpus()}]")
     n_shuffle = shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS
 
-    builder = (
-        SparkSession.builder.master(master)
-        .appName(app_name)
-        .config("spark.sql.shuffle.partitions", str(n_shuffle))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        # AQE coalescing targets bytes-per-partition, but the text/
-        # dedup operators do ~50× more CPU per shuffle byte (md5 over
-        # exploded n-grams), so the default 1 MB floor serializes
-        # CPU-bound stages on small inputs.  A 64 KB floor restores
-        # parallelism there and never binds at real shuffle volumes
-        # (totalSize/parallelism >> 64 KB on any 100 TB-scale stage).
-        .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.parquet.filterPushdown", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
-        .config("spark.ui.enabled", "false")
-        # Broadcast threshold: dimension tables (region/nation/...) are
-        # tiny at any SF; let Catalyst broadcast them rather than
-        # shuffling the fact side.
-        .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-    )
-    if extra_conf:
-        for k, v in extra_conf.items():
-            builder = builder.config(k, v)
+    builder = SparkSession.builder.master(master).appName(app_name)
+    for k, v in session_conf(master, n_shuffle, extra_conf).items():
+        builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
@@ -96,10 +133,6 @@ def local_fanout(spark: SparkSession, divisor: int = 1, floor: int = 4) -> int |
     force = os.environ.get("SPARK_GRAFT_FORCE_FANOUT")
     if force == "0":
         return None
-    m = spark.sparkContext.master
-    # 'local' / 'local[N]' only — NOT 'local-cluster[...]', which is a
-    # multi-JVM test cluster and must behave like a real one
-    is_local = m == "local" or m.startswith("local[")
-    if not is_local and force != "1":
+    if not is_local_master(spark.sparkContext.master) and force != "1":
         return None
     return max(floor, spark.sparkContext.defaultParallelism // divisor)

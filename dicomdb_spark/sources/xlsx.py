@@ -280,3 +280,11 @@ def write_xlsx(sheets: dict[str, list[list[object]]]) -> bytes:
         for part, xml in sheet_xml.items():
             zf.writestr(part, xml)
     return buf.getvalue()
+
+
+# UDF closures in this module must ship by value (see package __init__)
+import sys as _sys  # noqa: E402
+
+from dicomdb_spark import register_for_udf_pickling as _reg  # noqa: E402
+
+_reg(_sys.modules[__name__])

@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import datetime as dt
 import os
+import sys
 import tempfile
 from pathlib import Path
 
@@ -1087,6 +1088,16 @@ def test_jdbc_writers_pickle_by_value():
     assert jdbc.__name__ in cloudpickle.list_registry_pickle_by_value()
 
 
+def test_xlsx_reader_pickles_by_value():
+    # s4_xlsx_roundtrip's pandas UDF must not need the package on the
+    # workers' path either
+    from pyspark import cloudpickle
+
+    from dicomdb_spark.sources import xlsx
+
+    assert xlsx.__name__ in cloudpickle.list_registry_pickle_by_value()
+
+
 def test_hyperplane_bucket_literal_planes(spark):
     from dicomdb_spark.llm.similarity import hyperplane_bucket
 
@@ -1525,6 +1536,153 @@ def test_session_cpu_fallback():
     assert run() == [n, n]
     env["SPARK_GRAFT_CPUS"] = "3"
     assert run() == ["3", "3"]
+
+
+# ------------------------------------------------ python worker daemon
+def _write_zip(path, members):
+    import zipfile
+
+    with zipfile.ZipFile(path, "w") as zf:
+        for name, src in members.items():
+            zf.writestr(name, src)
+
+
+def test_zip_cache_rereads_only_changed_archives(tmp_path, monkeypatch):
+    """The worker daemon's ``invalidate_caches`` keeps an unchanged
+    archive's directory, re-reads a rewritten one (its new member
+    imports), and on a deleted one ends as the stdlib does."""
+    import importlib
+    import zipimport
+
+    from dicomdb_spark import worker_daemon as wd
+
+    reads, orig = [], zipimport._read_directory
+    monkeypatch.setattr(zipimport, "_read_directory", lambda a: reads.append(a) or orig(a))
+    zp = str(tmp_path / "mods.zip")
+    _write_zip(zp, {"wd_probe_a.py": "X = 1\n"})
+    monkeypatch.setattr(zipimport.zipimporter, "invalidate_caches", wd.invalidate_if_changed)
+    monkeypatch.syspath_prepend(zp)
+    try:
+        assert importlib.import_module("wd_probe_a").X == 1
+        imp = sys.path_importer_cache[zp]
+        assert isinstance(imp, zipimport.zipimporter)
+        imp.invalidate_caches()  # first call in this process: read, stamp
+        reads.clear()
+        imp.invalidate_caches()
+        assert reads == []  # unchanged archive: cached directory kept
+
+        _write_zip(zp, {"wd_probe_a.py": "X = 1\n", "wd_probe_b.py": "Y = 2\n"})
+        imp.invalidate_caches()
+        assert reads == [zp]
+        assert importlib.import_module("wd_probe_b").Y == 2
+
+        os.remove(zp)
+        imp.invalidate_caches()
+        assert imp._files == {}
+        assert zp not in zipimport._zip_directory_cache
+    finally:
+        for name in ("wd_probe_a", "wd_probe_b"):
+            sys.modules.pop(name, None)
+        sys.path_importer_cache.pop(zp, None)
+        zipimport._zip_directory_cache.pop(zp, None)
+        wd._stamps.pop(zp, None)
+
+
+@pytest.mark.skipif(sys.version_info >= (3, 12), reason="stdlib zipimport reloads lazily")
+def test_python_workers_keep_zip_directories(spark):
+    """Workers of the local session run the patched ``invalidate_caches``,
+    and a task's ``importlib.invalidate_caches()`` re-reads no archive."""
+    def probe(batches):
+        import importlib
+        import zipimport
+
+        import pandas as pd
+
+        from dicomdb_spark import worker_daemon
+
+        patched = zipimport.zipimporter.invalidate_caches is worker_daemon.invalidate_if_changed
+        reads, orig = [], zipimport._read_directory
+        importlib.invalidate_caches()
+        zipimport._read_directory = lambda a: reads.append(a) or orig(a)
+        try:
+            importlib.invalidate_caches()
+        finally:
+            zipimport._read_directory = orig
+        for _ in batches:
+            pass
+        yield pd.DataFrame({"patched": [patched], "reads": [len(reads)]})
+
+    rows = spark.range(4).repartition(4).mapInPandas(probe, "patched boolean, reads long").collect()
+    assert rows and all(r.patched and r.reads == 0 for r in rows)
+
+
+def test_local_session_from_foreign_cwd(tmp_path):
+    """A local session started outside the repo still finds the worker
+    daemon: a mapInPandas and a foreachPartition both run."""
+    import subprocess
+
+    script = (
+        "import sys; sys.path.insert(0, sys.argv[1])\n"
+        "from dicomdb_spark.session import get_spark\n"
+        "s = get_spark('foreign_cwd', 'local[2]', 2)\n"
+        "df = s.range(6).repartition(2)\n"
+        "n = df.mapInPandas(lambda it: (b.assign(id=b.id * 2) for b in it), 'id long')"
+        ".agg({'id': 'sum'}).first()[0]\n"
+        "df.foreachPartition(lambda rows: [r.id for r in rows])\n"
+        "print('RESULT', s.sparkContext.getConf().get('spark.python.daemon.module'), n)\n"
+        "s.stop()\n"
+    )
+    repo = str(Path(__file__).resolve().parents[1])
+    out = subprocess.run(
+        [sys.executable, "-c", script, repo], cwd=tmp_path, check=True, text=True,
+        capture_output=True, timeout=300,
+    ).stdout
+    assert "RESULT dicomdb_spark.worker_daemon 30" in out
+
+
+def test_session_conf_daemon_only_on_local_masters():
+    """local/local[N] get the worker daemon and the package root last on
+    the workers' PYTHONPATH; local-cluster and real masters keep the
+    stock daemon and the caller's PYTHONPATH."""
+    from dicomdb_spark import session
+
+    for master in ("local", "local[2]", "local[*]"):
+        conf = session.session_conf(master, 2, {"spark.executorEnv.PYTHONPATH": "/a"})
+        assert conf["spark.python.daemon.module"] == "dicomdb_spark.worker_daemon"
+        assert conf["spark.executorEnv.PYTHONPATH"] == os.pathsep.join(["/a", session._PACKAGE_ROOT])
+    for master in ("local-cluster[2,1,1024]", "spark://host:7077", "yarn", "k8s://host"):
+        conf = session.session_conf(master, 2, {"spark.executorEnv.PYTHONPATH": "/a"})
+        assert "spark.python.daemon.module" not in conf
+        assert conf["spark.executorEnv.PYTHONPATH"] == "/a"
+        assert "spark.executorEnv.PYTHONPATH" not in session.session_conf(master, 2)
+
+
+def test_reliable_checkpoints_are_cleaned(tmp_path):
+    """With SPARK_GRAFT_CHECKPOINT_DIR set, the session deletes reliable
+    checkpoint files of collected RDDs; unset, the conf stays Spark's
+    default.  One session per process: a SparkConf outlives stop()."""
+    import subprocess
+
+    script = (
+        "import sys; sys.path.insert(0, sys.argv[1])\n"
+        "from dicomdb_spark.session import get_spark\n"
+        "s = get_spark('ck_clean', 'local[1]', 1)\n"
+        "print('RESULT', s.sparkContext.getConf()"
+        ".get('spark.cleaner.referenceTracking.cleanCheckpoints'))\n"
+        "s.stop()\n"
+    )
+    repo = str(Path(__file__).resolve().parents[1])
+    env = {k: v for k, v in os.environ.items() if k != "SPARK_GRAFT_CHECKPOINT_DIR"}
+
+    def clean_conf():
+        return subprocess.run(
+            [sys.executable, "-c", script, repo], cwd=tmp_path, env=env, check=True,
+            text=True, capture_output=True, timeout=300,
+        ).stdout.split("RESULT ")[-1].strip()
+
+    assert clean_conf() == "None"
+    env["SPARK_GRAFT_CHECKPOINT_DIR"] = str(tmp_path / "ck")
+    assert clean_conf() == "true"
 
 
 def test_bucket_pair_dots_topk_prune_matches_window(spark):
