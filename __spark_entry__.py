@@ -19,7 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 sys.path.insert(0, str(Path(__file__).resolve().parent))
 
-from dicomdb_spark.registry import ORACLES, QUERIES, ordered_queries  # noqa: E402
+from dicomdb_spark.registry import ORACLES, QUERIES  # noqa: E402
 
 
 def entry(spark: SparkSession) -> DataFrame:
@@ -31,14 +31,52 @@ def entry(spark: SparkSession) -> DataFrame:
     return QUERIES["a2_dup_representative"](spark, "/root/testdata/sf0.001")
 
 
-def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """One entry per implemented operator from SURVEY.md §2.
+# Queries whose code changed after their last CORRECTNESS_r{N}.json
+# row.  A correctness round checks only the first 50 entries of
+# ``queries()``, so these lead.  A change to a query body, or to an engine
+# module a query runs, puts the query's name at the head; a name leaves
+# once a newer CORRECTNESS_r{N}.json row shows it matching.
+FRONT: tuple[str, ...] = (
+    # serie-frame exam linkage in the stack kernel; by-value xlsx UDF
+    "u3_stack_assembly", "e1_import_pipeline", "s4_xlsx_roundtrip",
+    # NULL-row guards, lineage cuts and kernel/persist rewrites that
+    # the r13/r14 rounds (first 50 of the older order) did not reach
+    "a_salted_hot_agg", "a_mad_outliers", "a_winsorized_mean",
+    "sketch_tdigest_quantiles", "a_bh_step_up", "a_median_polish",
+    "a_benjamini_yekutieli", "a_bartels_rank_test", "w_runs_up_down",
+    "text_fingerprint", "dedup_fingerprint", "text_lang_id",
+    "text_lang_id_ngram", "text_repetition", "multimodal_decode",
+    "multimodal_ann", "multimodal_features", "multimodal_decode_real",
+    "multimodal_audio_meta", "multimodal_decode_tiff_webp",
+    "multimodal_flac_meta", "corpus_weighted_sample", "ml_decision_stump",
+    "corpus_curriculum_phases", "dedup_osa_distance", "text_lcs_length",
+    "scd2_history", "tpch_q20_shape", "ann_lsh_buckets", "ann_pq_topk",
+    "ann_ivf_pq_topk", "ann_metric_agreement", "ml_roc_auc",
+    "ml_average_precision", "ann_bruteforce_topk", "ann_mips_topk",
+    "multimodal_container_stats", "dedup_dup_spans", "graph_bfs_hops",
+    "er_transitive_merge", "dedup_ngram_jaccard", "dedup_ngram_containment",
+    "dedup_components", "corpus_dedup_pipeline", "corpus_dedup_survivorship",
+    "corpus_dup_cluster_sizes", "graph_modularity", "graph_pagerank",
+    "graph_ppr_seeds", "text_textrank_weighted", "a_market_basket",
+    "sketch_bloom_join", "sketch_bloom_fpr_audit", "graph_hits_unrolled",
+    "a_theil_sen_daily", "a_hodges_lehmann", "a_rfm_segmentation",
+    "dedup_lsh_s_curve", "dedup_prefix_jaccard", "dedup_prefix_containment",
+    "er_threshold_sweep", "dedup_bbit_minhash_audit", "text_rake_keywords",
+    "text_boilerplate_ngrams", "dedup_minhash_jaccard_est",
+    "graph_harmonic_centrality", "graph_degree_ccdf",
+    "a_segment_migration_matrix", "graph_katz_bounded", "graph_kcore",
+    "emb_top_pc_power", "a_weighted_kappa", "graph_eccentricity",
+    "graph_ktruss_fixpoint", "graph_ktruss_peel", "text_ccnet_buckets",
+)
 
-    Ordered so queries without a prior driver correctness row come
-    first — if the checker caps the verified count per round, the cap
-    lands on already-proven entries (see registry.ordered_queries).
-    """
-    return ordered_queries()
+
+def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
+    """One entry per implemented operator from SURVEY.md §2: ``FRONT``
+    first, then the rest in registration order (registry/q01's
+    reference-operator surface leading)."""
+    out = {n: QUERIES[n] for n in FRONT}
+    out.update(QUERIES)
+    return out
 
 
 def oracle_sql() -> dict[str, str]:

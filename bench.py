@@ -1,8 +1,14 @@
 #!/usr/bin/env python
 """Benchmark harness: headline queries at $SPARK_GRAFT_SF_DIR.
 
-Prints ONE JSON line:
+Usage: python bench.py [QUERY ...]
+
+With no names, prints ONE JSON line last:
   {"metric": "...", "value": N, "unit": "sec", "queries": {...}, "sf": ...}
+
+With names, times only those queries (same ``run_query``: min-of-3
+noop writes, plus plan-build and rep-1 cold seconds) and prints one
+line per query; no idle guard, headline or scale tiers.
 
 Execution is measured with the noop sink (full plan runs distributed,
 no driver-side collect cost).  Queries chosen to span the engine's
@@ -276,8 +282,23 @@ def scale_ratios(
         return None
 
 
-def main() -> None:
+def time_queries(names: list[str], sf_dir: str) -> None:
+    """One line per named query: min-of-3 noop seconds, build, cold."""
+    unknown = [n for n in names if n not in QUERIES]
+    if unknown:
+        sys.exit(f"not registered: {' '.join(unknown)}")
+    spark = get_spark(app_name="dicomdb_spark_bench")
+    for name in names:
+        d: dict = {}
+        best = run_query(spark, name, sf_dir, detail=d)
+        print(f"{name:34s} min={best:.3f}  build={d['build']:.3f}  cold={d['cold']:.3f}")
+
+
+def main(names: list[str] | None = None) -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    if names:
+        time_queries(names, sf_dir)
+        return
     try:
         sf = float(sf_dir.rstrip("/").rsplit("sf", 1)[-1])
     except ValueError:  # non-sfN.N dir names (e.g. the 5× replicas)
@@ -556,4 +577,4 @@ def main() -> None:
 
 
 if __name__ == "__main__":
-    main()
+    main(sys.argv[1:])

@@ -12,17 +12,19 @@ here is written for *bitwise* determinism:
 * double→int conversions use explicit ``floor`` (Spark casts truncate,
   DuckDB casts round — never rely on the implicit behavior).
 
-Round-10 note: this package is the mechanical split of the former
-31k-line registry.py monolith (judge ask).  Chunks q01..q08 (split) and q09+ (new rounds) hold
-the @register bodies in their ORIGINAL order; _core holds the
-shared QUERIES/ORACLES dicts and helpers; _proven holds the
-driver-proven ledger and ordered_queries().  The loop below
-re-exports every module-level name so ``dicomdb_spark.registry``
-presents the exact namespace the monolith did.
+This package is the mechanical split of the former 31k-line
+registry.py monolith.  Chunks q01..q10 hold the @register bodies in
+their original order; _core holds the shared QUERIES/ORACLES dicts and
+helpers.  The loop below re-exports every module-level name so
+``dicomdb_spark.registry`` presents the namespace the monolith did.
+``QUERIES`` is in registration order: q01 first, q10 last.
+``__spark_entry__.queries()`` puts its ``FRONT`` names first, then
+this order.
 
 Module map (position-based names; which families live where — the
 split preserved the monolith's registration order, so modules group
-by ROUND, not by topic.  Counts refreshed round 11):
+by round, not by topic.  Counts are ``len`` of each chunk's share of
+``QUERIES``, 521 in all):
 
 * ``q01`` (107) — the SURVEY §2 reference surface: A/J/W/O/P/F/T/S/U/R
   rows (a1..t4), the source/sink roundtrips (s1..s13), plus the
@@ -53,9 +55,9 @@ by ROUND, not by topic.  Counts refreshed round 11):
   (PNG/GIF/BMP/JPEG/WAV), KLL/Misra-Gries, OSA/LCS, eccentricity,
   s14_orc, round-10 stats batches F-K.
   ``multimodal_decode_real`` .. ``ml_diagnostic_ratios``.
-* ``q10`` — round-11 additions: real TIFF/WebP decode, LZ76
-  complexity, Siegel-Tukey, generalized ESD; NEW rounds append here
-  (or start q11 when q10 nears 5k lines).
+* ``q10`` (7) — round-11 additions: real TIFF/WebP decode, LZ76
+  complexity, Siegel-Tukey, generalized ESD.
+  ``multimodal_decode_tiff_webp`` .. ``a_generalized_esd``.
 """
 from dicomdb_spark.registry import _core
 from dicomdb_spark.registry import q01
@@ -68,9 +70,8 @@ from dicomdb_spark.registry import q07
 from dicomdb_spark.registry import q08
 from dicomdb_spark.registry import q09
 from dicomdb_spark.registry import q10
-from dicomdb_spark.registry import _proven
 
-for _m in (_core, q01, q02, q03, q04, q05, q06, q07, q08, q09, q10, _proven):
+for _m in (_core, q01, q02, q03, q04, q05, q06, q07, q08, q09, q10):
     globals().update(
         {k: v for k, v in vars(_m).items() if not k.startswith('__')}
     )

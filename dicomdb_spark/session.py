@@ -127,12 +127,8 @@ def local_fanout(spark: SparkSession, divisor: int = 1, floor: int = 4) -> int |
     instead of passing ``defaultParallelism`` ad hoc, so the knob can
     never ship to a cluster: returns ``defaultParallelism // divisor``
     (min ``floor``) under a ``local[...]`` master, ``None`` (= no
-    repartition) otherwise.  ``SPARK_GRAFT_FORCE_FANOUT=0/1``
-    overrides both directions for experiments.
+    repartition) otherwise.
     """
-    force = os.environ.get("SPARK_GRAFT_FORCE_FANOUT")
-    if force == "0":
-        return None
-    if not is_local_master(spark.sparkContext.master) and force != "1":
+    if not is_local_master(spark.sparkContext.master):
         return None
     return max(floor, spark.sparkContext.defaultParallelism // divisor)

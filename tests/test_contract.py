@@ -2,7 +2,6 @@
 
 from __future__ import annotations
 
-import re
 import sys
 from pathlib import Path
 
@@ -20,6 +19,7 @@ from dicomdb_spark.parity import (
     canon_rows,
     oracle_con,
 )
+from dicomdb_spark.registry import QUERIES
 
 
 def test_entry_smoke(spark):
@@ -40,82 +40,17 @@ def test_registry_invariants():
     assert all(n.replace("_", "").isalnum() for n in qs)
 
 
-def test_queries_order_unproven_first():
-    # if the driver caps its per-round correctness window, entries
-    # without a round-1 driver row must be inside it
-    from dicomdb_spark.registry import QUERIES, DRIVER_PROVEN
-
-    names = list(entry_mod.queries())
-    assert set(names) == set(QUERIES)
-    # ledger hygiene: a typo'd or stale proven name would silently
-    # shrink the effective ledger and re-front an already-proven query
-    assert len(DRIVER_PROVEN) == len(set(DRIVER_PROVEN)), "duplicate ledger entry"
-    assert set(DRIVER_PROVEN) <= set(QUERIES), (
-        f"proven-but-unregistered: {sorted(set(DRIVER_PROVEN) - set(QUERIES))}"
-    )
-    n_unproven = len(QUERIES) - len(set(DRIVER_PROVEN) & set(QUERIES))
-    head = names[:n_unproven]
-    assert set(head) & set(DRIVER_PROVEN) == set()
-
-
-def test_modified_since_proven_fronted():
-    """Standing invariant (VERDICT r12 #6): proven-at-some-HEAD is not
-    proven-at-this-HEAD.  Any @register body edited since
-    PROVEN_AT_COMMIT (the code state the driver last proved) must be
-    fronted in MODIFIED_SINCE_PROVEN so the next driver window
-    re-proves it; engine-module edits must be acknowledged in
-    ENGINE_MODULES_ACK with fronted representative queries.  Runs
-    against the WORKING TREE, so the suite catches an un-fronted edit
-    before it is even committed."""
-    import subprocess
-
-    from dicomdb_spark.registry import QUERIES, DRIVER_PROVEN
-    from dicomdb_spark.registry._proven import (
-        ENGINE_MODULES_ACK,
-        MODIFIED_SINCE_PROVEN,
-        PROVEN_AT_COMMIT,
-    )
-
-    repo = Path(__file__).resolve().parents[1]
-    probe = subprocess.run(
-        ["git", "cat-file", "-e", f"{PROVEN_AT_COMMIT}^{{commit}}"],
-        cwd=repo, capture_output=True,
-    )
-    if probe.returncode != 0:
-        pytest.skip("PROVEN_AT_COMMIT unavailable (no git or shallow checkout)")
-
-    run = subprocess.run(
-        [sys.executable, str(repo / "tools_modified_queries.py"), PROVEN_AT_COMMIT],
-        cwd=repo, capture_output=True, text=True, check=True,
-    )
-    derived = {ln.strip() for ln in run.stdout.splitlines() if ln.strip()}
-    changed_modules = {
-        m.group(1)
-        for ln in run.stderr.splitlines()
-        if (m := re.match(r"#\s+(dicomdb_spark/\S+)", ln))
-    }
-
-    # unproven queries front automatically; everything else touched
-    # must be listed explicitly
-    fronted = set(MODIFIED_SINCE_PROVEN) | (set(QUERIES) - set(DRIVER_PROVEN))
-    unfronted = derived - fronted
-    assert not unfronted, (
-        f"registry bodies edited since {PROVEN_AT_COMMIT[:9]} but not in "
-        f"MODIFIED_SINCE_PROVEN (registry/_proven.py): {sorted(unfronted)}"
-    )
-
-    # _proven.py is this bookkeeping mechanism itself — window order
-    # only, no query semantics
-    exempt = {"dicomdb_spark/registry/_proven.py"}
-    unacked = changed_modules - exempt - set(ENGINE_MODULES_ACK)
-    assert not unacked, (
-        f"engine modules edited since {PROVEN_AT_COMMIT[:9]} but not "
-        f"acknowledged in ENGINE_MODULES_ACK: {sorted(unacked)}"
-    )
-    for path, names in ENGINE_MODULES_ACK.items():
-        stale = set(names) - fronted
-        assert not stale, f"ENGINE_MODULES_ACK[{path}] lists un-fronted {sorted(stale)}"
-        assert set(names) <= set(QUERIES), f"ENGINE_MODULES_ACK[{path}] has unknown names"
+def test_queries_order_front_first():
+    # a correctness round checks only the head of queries(): the names
+    # edited since their last CORRECTNESS row lead, then every other
+    # query once, in registration order.  A duplicate or unregistered
+    # FRONT name would silently shrink the fronted set.
+    front = entry_mod.FRONT
+    assert len(front) == len(set(front)), "duplicate FRONT entry"
+    assert set(front) <= set(QUERIES), sorted(set(front) - set(QUERIES))
+    fronted = set(front)
+    rest = [n for n in QUERIES if n not in fronted]
+    assert list(entry_mod.queries()) == [*front, *rest]
 
 
 _DUCK_CLASS = {
@@ -268,3 +203,23 @@ def test_selfcheck_exits_nonzero_on_failure(spark, monkeypatch, tmp_path):
     assert exit_code("bad") == 1
     assert exit_code("good") == 0
     assert exit_code("unregistered") == 1
+
+
+def test_selfcheck_from_foreign_cwd(tmp_path):
+    """selfcheck started outside the repo with no PYTHONPATH: its
+    session keeps the stock Python worker daemon, so the workers cannot
+    import the package and every pandas UDF a source query ships must
+    pickle by value (the xlsx reader, the stack-assembly kernel)."""
+    import os
+    import subprocess
+
+    repo = Path(__file__).resolve().parents[1]
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env["SELFCHECK_DRIVER_MEM"] = "2g"  # two queries need no 12g heap
+    run = subprocess.run(
+        [sys.executable, str(repo / "selfcheck.py"),
+         "s4_xlsx_roundtrip", "u3_stack_assembly"],
+        cwd=tmp_path, env=env, capture_output=True, text=True, timeout=600,
+    )
+    assert run.returncode == 0, run.stdout[-3000:] + run.stderr[-3000:]
+    assert "2 queries: ALL MATCH" in run.stdout, run.stdout[-3000:]
