@@ -37,6 +37,14 @@ def entry(spark: SparkSession) -> DataFrame:
 # module a query runs, puts the query's name at the head; a name leaves
 # once a newer CORRECTNESS_r{N}.json row shows it matching.
 FRONT: tuple[str, ...] = (
+    # one fixed-point kernel (llm/similarity.fixed_sum) under every
+    # dot/norm/distance UDF: the queries that reach it
+    "ann_bruteforce_topk", "ann_lsh_buckets", "ann_lsh_topk",
+    "ann_rerank_topk", "multimodal_ann", "ann_ivf_topk",
+    "dedup_embedding_cosine", "ann_ivf_trained_topk", "dedup_semantic_kmeans",
+    "ann_pq_topk", "ann_mips_topk", "ann_ivf_pq_topk", "ann_lsh_multiprobe_topk",
+    "corpus_semantic_dedup_pipeline", "ann_recall_eval", "ml_knn_classify",
+    "ann_metric_agreement",
     # serie-frame exam linkage in the stack kernel; by-value xlsx UDF
     "u3_stack_assembly", "e1_import_pipeline", "s4_xlsx_roundtrip",
     # NULL-row guards, lineage cuts and kernel/persist rewrites that
@@ -46,13 +54,11 @@ FRONT: tuple[str, ...] = (
     "a_benjamini_yekutieli", "a_bartels_rank_test", "w_runs_up_down",
     "text_fingerprint", "dedup_fingerprint", "text_lang_id",
     "text_lang_id_ngram", "text_repetition", "multimodal_decode",
-    "multimodal_ann", "multimodal_features", "multimodal_decode_real",
+    "multimodal_features", "multimodal_decode_real",
     "multimodal_audio_meta", "multimodal_decode_tiff_webp",
     "multimodal_flac_meta", "corpus_weighted_sample", "ml_decision_stump",
     "corpus_curriculum_phases", "dedup_osa_distance", "text_lcs_length",
-    "scd2_history", "tpch_q20_shape", "ann_lsh_buckets", "ann_pq_topk",
-    "ann_ivf_pq_topk", "ann_metric_agreement", "ml_roc_auc",
-    "ml_average_precision", "ann_bruteforce_topk", "ann_mips_topk",
+    "scd2_history", "tpch_q20_shape", "ml_roc_auc", "ml_average_precision",
     "multimodal_container_stats", "dedup_dup_spans", "graph_bfs_hops",
     "er_transitive_merge", "dedup_ngram_jaccard", "dedup_ngram_containment",
     "dedup_components", "corpus_dedup_pipeline", "corpus_dedup_survivorship",

@@ -200,11 +200,11 @@ SCALE_QUERIES = [
     "dedup_ngram_jaccard",
     "tpch_q1_shape",
 ]
-SCALE_FACTOR = int(os.environ.get("SPARK_GRAFT_SCALE_FACTOR", "5"))
+SCALE_FACTOR = 5
 # second tier: 10× of sf0.1 ≈ sf1 (6M-row lineitem) — large enough that
 # sf0.1's single-row-group artifacts (the min_parallelism family)
 # vanish, making ratios transferable to real multi-file scans
-SF1_FACTOR = int(os.environ.get("SPARK_GRAFT_SF1_FACTOR", "10"))
+SF1_FACTOR = 10
 # third tier (round 10, VERDICT r9 #3): the five WORST sf1 scalers
 # re-measured at a 20× replica (≈ sf2, 12M-row lineitem).  The signal
 # is the sf2/sf1 step — a 2× data step at the top tier: a plan-linear
@@ -212,7 +212,7 @@ SF1_FACTOR = int(os.environ.get("SPARK_GRAFT_SF1_FACTOR", "10"))
 # hit counts, LSH candidate pairs over replicated identical texts)
 # steps more, and rows_ratio says exactly how much of the step is the
 # answer growing vs the plan degrading.
-SF2_FACTOR = int(os.environ.get("SPARK_GRAFT_SF2_FACTOR", "20"))
+SF2_FACTOR = 20
 WORST_SF1_SCALERS = [
     "j3_time_proximity",
     "dedup_minhash_lsh",
@@ -242,7 +242,7 @@ def scale_ratios(
     spark, sf_dir: str, factor: int
 ) -> tuple[dict[str, float], dict[str, dict]] | None:
     """1× vs factor× wall ratios plus per-query OUTPUT row counts, or
-    None when disabled/failed.
+    None when the tier fails.
 
     rows_out makes output-quadratic artifacts machine-distinguishable
     from genuinely super-linear compute: a band self-join over a
@@ -251,8 +251,6 @@ def scale_ratios(
     rows_ratio tracking the wall ratio.  A query whose wall ratio
     exceeds factor while rows_ratio stays ≈ factor is the real
     scale-design bug."""
-    if os.environ.get("SPARK_GRAFT_SCALE_CHECK", "1") == "0":
-        return None
     try:
         from dicomdb_spark.fixtures import replicate_scaled
 
@@ -487,89 +485,86 @@ def main(names: list[str] | None = None) -> None:
         out["scale_max_ratio"] = max(ratios.values())
         detail["scale_ratios"] = ratios
         detail["scale_rows_out"] = rows_out
-    if os.environ.get("SPARK_GRAFT_SF1_CHECK", "1") != "0":
-        sf1 = scale_ratios(spark, sf_dir, SF1_FACTOR)
-        if sf1 is not None:
-            sf1_ratios, sf1_rows = sf1
-            out["sf1_factor"] = SF1_FACTOR
-            out["sf1_max_ratio"] = max(sf1_ratios.values())
-            detail["sf1_ratios"] = sf1_ratios
-            detail["sf1_rows_out"] = sf1_rows
+    sf1 = scale_ratios(spark, sf_dir, SF1_FACTOR)
+    if sf1 is not None:
+        sf1_ratios, sf1_rows = sf1
+        out["sf1_factor"] = SF1_FACTOR
+        out["sf1_max_ratio"] = max(sf1_ratios.values())
+        detail["sf1_ratios"] = sf1_ratios
+        detail["sf1_rows_out"] = sf1_rows
     # absolute sf1 tier: the full 19-query headline against the 10×
     # replica (≈ sf1 — 6M-row lineitem).  At sf0.1 the 8-second total
     # drowns round-over-round deltas in noise; the sf1 wall is the
     # number cross-round comparisons should use.  Per-query times ride
     # the detail line; only the one-number total joins the (size-
     # capped) final headline line.
-    if os.environ.get("SPARK_GRAFT_SF1_HEADLINE", "1") != "0":
-        scaled = _scaled_dir(sf_dir, SF1_FACTOR)
-        if os.path.isdir(scaled):
-            # Per-tier idle guard (round-11 VERDICT #1): the r11
-            # artifact recorded sf1 23.29 s vs 14.13 s idle on
-            # identical code because the single guard ran tens of
-            # minutes before this tier under ambient load.  Re-check
-            # here and stamp the state (plus load1 AFTER the tier) so
-            # a loaded sf1 number is machine-flagged in the artifact.
-            out["idle_guard_sf1"] = idle_guard(max_wait_s=120.0)
-            sf1_q: dict[str, float] = {}
-            # best-of-2 passes: a transient load spike mid-pass taxes
-            # several queries at once; the cross-pass per-query min
-            # keeps one clean measurement each
-            for _ in range(2):
-                for name in HEADLINE:
-                    try:
-                        t = run_query(spark, name, scaled, reps=2)
-                        prev = sf1_q.get(name, float("inf"))
-                        if prev < 0:  # failed pass 1, succeeded pass 2
-                            prev = float("inf")
-                        sf1_q[name] = round(min(prev, t), 4)
-                    except Exception:
-                        sf1_q.setdefault(name, -1.0)
-            out["idle_guard_sf1"]["load1_after"] = round(
-                os.getloadavg()[0], 2
-            )
-            detail["sf1_queries"] = sf1_q
-            out["sf1_value"] = round(
-                sum(t for t in sf1_q.values() if t > 0), 4
-            )
+    scaled = _scaled_dir(sf_dir, SF1_FACTOR)
+    if os.path.isdir(scaled):
+        # Per-tier idle guard (round-11 VERDICT #1): the r11
+        # artifact recorded sf1 23.29 s vs 14.13 s idle on
+        # identical code because the single guard ran tens of
+        # minutes before this tier under ambient load.  Re-check
+        # here and stamp the state (plus load1 AFTER the tier) so
+        # a loaded sf1 number is machine-flagged in the artifact.
+        out["idle_guard_sf1"] = idle_guard(max_wait_s=120.0)
+        sf1_q: dict[str, float] = {}
+        # best-of-2 passes: a transient load spike mid-pass taxes
+        # several queries at once; the cross-pass per-query min
+        # keeps one clean measurement each
+        for _ in range(2):
+            for name in HEADLINE:
+                try:
+                    t = run_query(spark, name, scaled, reps=2)
+                    prev = sf1_q.get(name, float("inf"))
+                    if prev < 0:  # failed pass 1, succeeded pass 2
+                        prev = float("inf")
+                    sf1_q[name] = round(min(prev, t), 4)
+                except Exception:
+                    sf1_q.setdefault(name, -1.0)
+        out["idle_guard_sf1"]["load1_after"] = round(
+            os.getloadavg()[0], 2
+        )
+        detail["sf1_queries"] = sf1_q
+        out["sf1_value"] = round(
+            sum(t for t in sf1_q.values() if t > 0), 4
+        )
     # sf2 tier: worst-scaler step ratios between the 10× and 20×
     # replicas, with output rows at both tiers (growth attribution)
-    if os.environ.get("SPARK_GRAFT_SF2_CHECK", "1") != "0":
-        try:
-            from dicomdb_spark.fixtures import replicate_scaled
+    try:
+        from dicomdb_spark.fixtures import replicate_scaled
 
-            d10 = _scaled_dir(sf_dir, SF1_FACTOR)
-            d20 = _scaled_dir(sf_dir, SF2_FACTOR)
-            if not os.path.isdir(d20):
-                replicate_scaled(spark, sf_dir, d20, factor=SF2_FACTOR)
-            # per-tier idle guard, same rationale as the sf1 tier
-            out["idle_guard_sf2"] = idle_guard(max_wait_s=120.0)
-            sf2_detail: dict[str, dict] = {}
-            worst_step = 0.0
-            for name in WORST_SF1_SCALERS:
-                t10 = run_query(spark, name, d10, reps=2)
-                t20 = run_query(spark, name, d20, reps=2)
-                r10 = QUERIES[name](spark, d10).count()
-                r20 = QUERIES[name](spark, d20).count()
-                step = round(t20 / t10, 2) if t10 > 0 else -1.0
-                worst_step = max(worst_step, step)
-                sf2_detail[name] = {
-                    "wall_x10": round(t10, 4),
-                    "wall_x20": round(t20, 4),
-                    "wall_step": step,
-                    "rows_x10": r10,
-                    "rows_x20": r20,
-                    "rows_step": round(r20 / r10, 2) if r10 > 0 else -1.0,
-                }
-                spark.catalog.clearCache()
-            out["idle_guard_sf2"]["load1_after"] = round(
-                os.getloadavg()[0], 2
-            )
-            detail["sf2_worst_scalers"] = sf2_detail
-            out["sf2_factor"] = SF2_FACTOR
-            out["sf2_max_step"] = worst_step
-        except Exception:  # never break the headline metric
-            pass
+        d10 = _scaled_dir(sf_dir, SF1_FACTOR)
+        d20 = _scaled_dir(sf_dir, SF2_FACTOR)
+        if not os.path.isdir(d20):
+            replicate_scaled(spark, sf_dir, d20, factor=SF2_FACTOR)
+        # per-tier idle guard, same rationale as the sf1 tier
+        out["idle_guard_sf2"] = idle_guard(max_wait_s=120.0)
+        sf2_detail: dict[str, dict] = {}
+        worst_step = 0.0
+        for name in WORST_SF1_SCALERS:
+            t10 = run_query(spark, name, d10, reps=2)
+            t20 = run_query(spark, name, d20, reps=2)
+            r10 = QUERIES[name](spark, d10).count()
+            r20 = QUERIES[name](spark, d20).count()
+            step = round(t20 / t10, 2) if t10 > 0 else -1.0
+            worst_step = max(worst_step, step)
+            sf2_detail[name] = {
+                "wall_x10": round(t10, 4),
+                "wall_x20": round(t20, 4),
+                "wall_step": step,
+                "rows_x10": r10,
+                "rows_x20": r20,
+                "rows_step": round(r20 / r10, 2) if r10 > 0 else -1.0,
+            }
+            spark.catalog.clearCache()
+        out["idle_guard_sf2"]["load1_after"] = round(
+            os.getloadavg()[0], 2
+        )
+        detail["sf2_worst_scalers"] = sf2_detail
+        out["sf2_factor"] = SF2_FACTOR
+        out["sf2_max_step"] = worst_step
+    except Exception:  # never break the headline metric
+        pass
     print(json.dumps(detail))
     line = json.dumps(out)
     assert len(line) < 1900, f"headline line too long ({len(line)} bytes)"

@@ -29,7 +29,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from dicomdb_spark.llm.similarity import _SCALE, dot_exact_vec
+from dicomdb_spark.llm.similarity import _SCALE, dot_exact_vec, fixed_norm, fixed_sum
 
 
 def assign_clusters(
@@ -38,7 +38,12 @@ def assign_clusters(
     id_col: str = "vec_id",
     vec_col: str = "v",
 ) -> DataFrame:
-    """Map-only cluster assignment against a broadcast centroid list.
+    """Map-only cluster assignment against a broadcast centroid list,
+    fused with the per-vector norm: ONE corpus scan and ONE Arrow hop
+    returning (id_col, vec_col, cid, nrm).  The pair-scoring consumers
+    (semantic dedup, trained-IVF search) take the norm per VECTOR from
+    here instead of a second ArrowEvalPython pass or a per-PAIR
+    re-derivation (guide §4.1, §2.3); the training loop ignores it.
 
     ``centroids`` MUST be the TAGGED list of ``(cid, vector)`` pairs
     that kmeans_fit / update_centroids emit — the tagged form
@@ -50,10 +55,11 @@ def assign_clusters(
     type-sniffing misparsed a vector-as-tuple as (cid, vector)
     (ADVICE r12), so the tagged form is the only accepted input.
 
-    Returns (id_col, vec_col, cid).  Argmin of the floor-scaled int
-    squared distance; numpy argmin returns the FIRST minimum, which is
-    the lowest cid — the documented tie-break (cids are emitted in
-    ascending order, so first-minimum == lowest original cid).
+    cid is the argmin of the floor-scaled int squared distance; numpy
+    argmin returns the FIRST minimum, which is the lowest cid — the
+    documented tie-break (cids are emitted in ascending order, so
+    first-minimum == lowest original cid).  nrm is
+    :func:`~dicomdb_spark.llm.similarity.fixed_norm`.
 
     NULL vectors are dropped up front — unclusterable, and a scalar
     None crashes the numpy batch (r13 null-probe find); oracles state
@@ -75,16 +81,17 @@ def assign_clusters(
     cid_tags = np.asarray([c for c, _ in centroids], dtype=np.int32)
     C = np.asarray([v for _, v in centroids], dtype=np.float64)
 
-    @F.pandas_udf("int")
-    def _assign(x: pd.Series) -> pd.Series:
+    @F.pandas_udf("cid int, nrm double")
+    def _assign(x: pd.Series) -> pd.DataFrame:
         A = np.vstack(x.to_numpy()).astype(np.float64)
         # (rows, k) exact int distances, one centroid at a time to keep
         # the temporary at batch×dims
         d = np.empty((A.shape[0], C.shape[0]), dtype=np.int64)
         for j in range(C.shape[0]):
             diff = A - C[j]
-            d[:, j] = np.floor(diff * diff * _SCALE).astype(np.int64).sum(axis=1)
-        return pd.Series(cid_tags[np.argmin(d, axis=1)].astype("int32"))
+            d[:, j] = fixed_sum(diff, diff)
+        cid = cid_tags[np.argmin(d, axis=1)].astype("int32")
+        return pd.DataFrame({"cid": cid, "nrm": fixed_norm(A)})
 
     # coalesce(-1) is an identity (the UDF never returns null for the
     # null-filtered input): it makes cid statically non-nullable, so an
@@ -92,68 +99,9 @@ def assign_clusters(
     # this projection — which re-evaluated the whole assignment UDF a
     # second time per join side (guide §4.4; observed 4 ArrowEvalPython
     # corpus passes in dedup_semantic_kmeans's before-plan).
-    return vectors.select(
-        F.col(id_col),
-        F.col(vec_col),
-        F.coalesce(
-            _assign(F.col(vec_col).cast("array<double>")), F.lit(-1)
-        ).alias("cid"),
-    )
-
-
-def assign_clusters_with_norm(
-    vectors: DataFrame,
-    centroids: list,
-    id_col: str = "vec_id",
-    vec_col: str = "v",
-) -> DataFrame:
-    """:func:`assign_clusters` fused with the per-vector norm — ONE
-    corpus scan and ONE Arrow hop returning (id, vec, cid, nrm), for
-    the pair-scoring consumers (semantic dedup, trained-IVF search)
-    that previously paid a second ArrowEvalPython pass for the norm
-    and re-derived it per PAIR instead of per vector (guide §4.1 —
-    one Python boundary crossing; §2.3 — aggregate work before the
-    pair join fans out).
-
-    Bitwise-identical to the split form: the distance argmin and the
-    floor-scaled int64 norm are the same kernels, evaluated on the
-    same NULL-filtered rows.  Same tagged-centroid contract and the
-    same coalesce(-1) non-null join key as assign_clusters.
-    """
-    import numpy as np
-
-    vectors = vectors.filter(F.col(vec_col).isNotNull())
-
-    if not all(
-        isinstance(c, tuple) and len(c) == 2 and isinstance(c[0], int)
-        for c in centroids
-    ):
-        raise TypeError(
-            "assign_clusters_with_norm expects tagged centroids "
-            "[(cid, vector), ...] as produced by kmeans_fit/"
-            "update_centroids; got a raw vector list — tag it with its "
-            "cids explicitly"
-        )
-    cid_tags = np.asarray([c for c, _ in centroids], dtype=np.int32)
-    C = np.asarray([v for _, v in centroids], dtype=np.float64)
-
-    @F.pandas_udf("cid int, nrm double")
-    def _assign_norm(x: pd.Series) -> pd.DataFrame:
-        A = np.vstack(x.to_numpy()).astype(np.float64)
-        d = np.empty((A.shape[0], C.shape[0]), dtype=np.int64)
-        for j in range(C.shape[0]):
-            diff = A - C[j]
-            d[:, j] = np.floor(diff * diff * _SCALE).astype(np.int64).sum(axis=1)
-        nrm = np.sqrt(
-            np.floor(A * A * _SCALE).astype(np.int64).sum(axis=1) / _SCALE
-        )
-        return pd.DataFrame(
-            {"cid": cid_tags[np.argmin(d, axis=1)].astype("int32"), "nrm": nrm}
-        )
-
     return (
         vectors.select(id_col, vec_col)
-        .withColumn("__an", _assign_norm(F.col(vec_col).cast("array<double>")))
+        .withColumn("__an", _assign(F.col(vec_col).cast("array<double>")))
         .select(
             id_col,
             vec_col,
@@ -245,11 +193,11 @@ def semantic_dedup_pairs(
     if min_parallelism is not None:
         vectors = vectors.repartition(min_parallelism).persist()
     centroids = kmeans_fit(vectors, id_col, vec_col, k=k, iters=iters)
-    # fused assign+norm: norms are computed once per VECTOR in the same
-    # Arrow hop as the assignment; the pair stage below then evaluates
-    # only the dot UDF per pair instead of dot + 2 per-pair norms
-    # (guide §4.1 — before-plan: 3 pair-wide UDFs evaluated twice)
-    assigned = assign_clusters_with_norm(vectors, centroids, id_col, vec_col)
+    # norms come once per VECTOR from the assignment's Arrow hop; the
+    # pair stage below then evaluates only the dot UDF per pair instead
+    # of dot + 2 per-pair norms (guide §4.1 — before-plan: 3 pair-wide
+    # UDFs evaluated twice)
+    assigned = assign_clusters(vectors, centroids, id_col, vec_col)
     a = assigned.select(
         F.col(id_col).alias("id1"), F.col(vec_col).alias("__v1"), "cid",
         F.col("nrm").alias("__n1"),

@@ -27,7 +27,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from dicomdb_spark.llm.similarity import _SCALE
+from dicomdb_spark.llm.similarity import _SCALE, fixed_sum
 
 
 def _sub(vec_col: str, s: int, sub_dim: int):
@@ -75,8 +75,8 @@ def _assign_joint(
 ) -> DataFrame:
     """(id, sub, code) for every subvector against its own subspace's
     broadcast codebook — ONE map-only pass over all subspaces (the
-    per-batch numpy groups rows by sub).  Identical floor-scaled
-    arithmetic to llm/clustering.assign_clusters."""
+    per-batch numpy groups rows by sub).  The same fixed_sum squared
+    distance as llm/clustering.assign_clusters."""
     import numpy as np
 
     mats = [np.asarray(b, dtype=np.float64) for b in books]
@@ -92,7 +92,7 @@ def _assign_joint(
             d = np.empty((len(idx), C.shape[0]), dtype=np.int64)
             for j in range(C.shape[0]):
                 diff = A[idx] - C[j]
-                d[:, j] = np.floor(diff * diff * _SCALE).astype(np.int64).sum(axis=1)
+                d[:, j] = fixed_sum(diff, diff)
             out[idx] = np.argmin(d, axis=1).astype(np.int32)
         return pd.Series(out)
 

@@ -86,10 +86,10 @@ def rerank_topk(
     bounded for an interactive batch but linear in the query-workload
     size, so an offline rerank of millions of queries would OOM a
     pinned build side.  Default False lets stats + AQE pick the
-    strategy (mirroring ``similarity.brute_force_topk``'s
-    ``broadcast_queries`` knob); pass True only when the query batch
-    is known-small and you want the map-side payload gather
-    guaranteed (the doc table then never shuffles).
+    strategy; pass True only when the query batch is known-small and
+    you want the map-side payload gather guaranteed (the doc table
+    then never shuffles), as ``similarity.brute_force_topk`` always
+    does for its query batch.
     """
     score = scorer or fusion_score
     qd = docs.select(

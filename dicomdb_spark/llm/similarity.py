@@ -1,26 +1,34 @@
 """Approximate-nearest-neighbor search over embedding columns.
 
-Two strategies over ``array<float>`` columns:
+Three candidate generators over ``array<float>`` columns, one scoring
+kernel under all of them:
 
-* **brute-force top-k** — the correctness baseline: queries × corpus
-  join, exact cosine, window top-k.  The corpus side stays put; the
+* **brute-force top-k** (:func:`brute_force_topk`, :func:`mips_topk`)
+  — the correctness baseline: queries × corpus join, exact cosine or
+  inner product, window top-k.  The corpus side stays put; the
   (small) query side is broadcast, so the cost is one map-side pass
-  over the corpus per batch of queries — at 100 TB this is the right
-  plan whenever |queries| is small.
-* **hyperplane-LSH bucketed** — the scale path for all-pairs /
-  large-query workloads: sign-of-dot-product against a fixed set of
-  hyperplanes gives each vector a bucket key; candidates only meet
-  inside buckets (equi-join on the bucket key → normal shuffled hash
-  join, never a cross join).
+  over the corpus per batch of queries.
+* **hyperplane-LSH buckets** (:func:`bucketed_norm_corpus`,
+  :func:`bucket_pair_dots`) — the scale path for all-pairs /
+  large-query workloads: sign-of-dot-product against the first
+  ``n_planes`` corpus vectors gives each vector a bucket key;
+  candidates only meet inside buckets (a group or equi-join on the
+  key, never a cross join).
+* **IVF cells** (:func:`seed_cell_norm_corpus`) — the max-dot seed
+  centroid as an inverted-file cell id; candidates meet on the cell.
 
-Determinism: dot products floor each per-element product at a fixed
-scale and sum exact int64s, so similarity values are bit-identical
-across partitionings, engines, and the fold/vectorized kernels;
-ranking ties break by neighbor id.
+Determinism: every dot product, norm and squared distance in the
+``llm`` kernels goes through :func:`fixed_sum` — each per-element
+product floored at a fixed scale, then an exact int64 sum — so values
+are bit-identical across partitionings, batch boundaries and engines
+(the DuckDB oracles spell the same formula as
+``registry._core._SQL_DOT`` / ``_sql_norm``); ranking ties break by
+neighbor id.
 """
 
 from __future__ import annotations
 
+import numpy as np
 import pandas as pd
 
 from pyspark.sql import Column, DataFrame, Window
@@ -35,6 +43,25 @@ from pyspark.sql import functions as F
 _SCALE = 1e12
 
 
+def fixed_sum(x, y):
+    """Σ floor(x·y·1e12) over the last axis, as exact int64 — THE
+    fixed-point kernel.  Broadcasts like ``x * y``.  The product order
+    ``(x·y)·1e12`` is DuckDB's ``a.v[i] * b.v[i] * 1e12``; any other
+    order is a different double.  Divide by ``_SCALE`` for the value;
+    compare the ints directly for signs and argmins."""
+    return np.floor(x * y * _SCALE).astype(np.int64).sum(axis=-1)
+
+
+def fixed_norm(x):
+    """sqrt(fixed_sum(x, x) / 1e12) per row — the exact L2 norm."""
+    return np.sqrt(fixed_sum(x, x) / _SCALE)
+
+
+def _matrix(s: pd.Series):
+    """An Arrow batch's array column as a (rows, dims) float64 matrix."""
+    return np.vstack(s.to_numpy()).astype(np.float64)
+
+
 def drop_null_vectors(df: DataFrame, vec_col: str = "embedding") -> DataFrame:
     """Exclude rows whose vector is NULL — broken upstream
     featurization produces them in real feeds, and a scalar None
@@ -45,119 +72,51 @@ def drop_null_vectors(df: DataFrame, vec_col: str = "embedding") -> DataFrame:
     return df.filter(F.col(vec_col).isNotNull())
 
 
-def dot_exact(a: Column, b: Column) -> Column:
-    """Order-independent, engine-portable dot product (double out)."""
-    return (
-        F.aggregate(
-            F.zip_with(
-                a.cast("array<double>"), b.cast("array<double>"), lambda x, y: x * y
-            ),
-            F.lit(0).cast("long"),
-            lambda acc, v: acc + F.floor(v * _SCALE).cast("long"),
-        )
-        / _SCALE
-    ).cast("double")
+def _rowwise(kernel, *cols: pd.Series) -> pd.Series:
+    """``kernel`` over the matrices of ``cols``, NULL (NaN → Arrow
+    null) on every row where any column is NULL — SQL dot(NULL, v) is
+    NULL, and a scalar None breaks np.vstack (r13 null-probe find)."""
+    valid = np.logical_and.reduce([c.notna().to_numpy() for c in cols])
+    if valid.all():
+        # fast path for the overwhelmingly common all-valid batch: no
+        # NaN-Series allocation, no boolean fancy-index copies (the
+        # masked path cost the brute-force scorer +45 % even when no
+        # NULLs existed — r13 driver control run)
+        return pd.Series(kernel(*map(_matrix, cols)), index=cols[0].index)
+    out = pd.Series(np.nan, index=cols[0].index, dtype="float64")
+    if valid.any():
+        out[valid] = kernel(*(_matrix(c[valid]) for c in cols))
+    return out
 
 
-def norm_exact(a: Column) -> Column:
-    return F.sqrt(
-        (
-            F.aggregate(
-                a.cast("array<double>"),
-                F.lit(0).cast("long"),
-                lambda acc, v: acc + F.floor(v * v * _SCALE).cast("long"),
-            )
-            / _SCALE
-        ).cast("double")
-    )
-
-
-def cosine_exact(a: Column, b: Column) -> Column:
-    return dot_exact(a, b) / (norm_exact(a) * norm_exact(b))
-
-
-# -- vectorized twins -------------------------------------------------------
-# Same fixed-point formula, evaluated in numpy over Arrow batches.
-# Bit-identical to the fold versions: the elementwise double product,
-# the floor, and the int64 sum are all IEEE/exact operations with no
-# order dependence — so these are drop-in replacements where the
-# per-element fold's interpreter overhead dominates (every ANN scoring
-# loop).  ~10× faster per pair than the interpreted aggregate.
-
-
-def _np_fixed_dot(a, b):
-    import numpy as np
-
-    va = np.asarray(a, dtype=np.float64)
-    vb = np.asarray(b, dtype=np.float64)
-    return np.floor(va * vb * _SCALE).astype(np.int64).sum() / _SCALE
+# UDFs are built lazily: pandas_udf decoration needs an active session,
+# and this module must stay importable before one exists (the driver
+# imports __spark_entry__ → registry → here at startup).  Each scores a
+# whole Arrow batch in one C-level pass, not a Python loop per pair.
 
 
 def dot_exact_vec(a: Column, b: Column) -> Column:
-    # UDF built lazily: pandas_udf decoration needs an active session,
-    # and this module must stay importable before one exists (the
-    # driver imports __spark_entry__ → registry → here at startup)
+    """Exact fixed-point dot product (double out), NULL on NULL input."""
+
     @F.pandas_udf("double")
     def _dot(x: pd.Series, y: pd.Series) -> pd.Series:
-        import numpy as np
-
-        # NULL propagates (SQL dot(NULL, v) is NULL): mask null cells
-        # out of the batch — a scalar None breaks np.vstack (r13
-        # null-probe find)
-        valid = x.notna().to_numpy() & y.notna().to_numpy()
-        if valid.all():
-            # fast path for the overwhelmingly common all-valid batch:
-            # no NaN-Series allocation, no boolean fancy-index copies
-            # (the masked path cost the brute-force scorer +45 % even
-            # when no NULLs existed — r13 driver control run)
-            A = np.vstack(x.to_numpy()).astype(np.float64)
-            B = np.vstack(y.to_numpy()).astype(np.float64)
-            return pd.Series(
-                np.floor(A * B * _SCALE).astype(np.int64).sum(axis=1) / _SCALE,
-                index=x.index,
-            )
-        out = pd.Series(np.nan, index=x.index, dtype="float64")
-        if valid.any():
-            # whole-batch matrices: one C-level pass for the entire
-            # Arrow batch instead of a Python loop per pair
-            A = np.vstack(x[valid].to_numpy()).astype(np.float64)
-            B = np.vstack(y[valid].to_numpy()).astype(np.float64)
-            out[valid] = (
-                np.floor(A * B * _SCALE).astype(np.int64).sum(axis=1) / _SCALE
-            )
-        return out
+        return _rowwise(lambda A, B: fixed_sum(A, B) / _SCALE, x, y)
 
     return _dot(a, b)
 
 
 def norm_exact_vec(a: Column) -> Column:
+    """Exact fixed-point L2 norm (double out), NULL on NULL input."""
+
     @F.pandas_udf("double")
     def _norm(x: pd.Series) -> pd.Series:
-        import numpy as np
-
-        valid = x.notna().to_numpy()
-        if valid.all():
-            # all-valid fast path — see _dot above
-            A = np.vstack(x.to_numpy()).astype(np.float64)
-            return pd.Series(
-                np.sqrt(
-                    np.floor(A * A * _SCALE).astype(np.int64).sum(axis=1) / _SCALE
-                ),
-                index=x.index,
-            )
-        out = pd.Series(np.nan, index=x.index, dtype="float64")
-        if valid.any():
-            A = np.vstack(x[valid].to_numpy()).astype(np.float64)
-            out[valid] = np.sqrt(
-                np.floor(A * A * _SCALE).astype(np.int64).sum(axis=1) / _SCALE
-            )
-        return out
+        return _rowwise(fixed_norm, x)
 
     return _norm(a)
 
 
 def cosine_exact_vec(a: Column, b: Column) -> Column:
-    """Vectorized cosine with bit-identical results to cosine_exact."""
+    """Exact fixed-point cosine: dot / (norm·norm), NULL on a zero norm."""
     ad = a.cast("array<double>")
     bd = b.cast("array<double>")
     # nullif: a zero-norm vector (empty doc → zero embedding) must
@@ -295,77 +254,26 @@ def mips_augment(
     return c_aug, q_aug
 
 
-def bucket_by_seed_planes(
-    vectors: DataFrame,
-    n_planes: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Assign every vector an LSH bucket from sign-of-dot against seed
-    hyperplanes — the first ``n_planes`` vectors of the corpus itself
-    (deterministic, data-derived, no RNG).
-
-    Plan shape: corpus × broadcast(planes) → 8 rows per vector →
-    groupBy(id) reassembles the bit-string ordered by plane id.  At
-    scale this is a map-side broadcast join + one hash aggregate.
-    Returns (id, bucket<string>).
-    """
-    import numpy as np
-
-    vectors = drop_null_vectors(vectors, vec_col)
-    # The planes are a tiny constant matrix: collect once at plan-build
-    # time and close over it — ONE map-only pandas UDF assigns all bits
-    # per vector (no cross join, no re-aggregation shuffle).  Bitwise
-    # identical to the per-plane fold: same floor-scaled int sums.
-    plane_rows = (
-        vectors.filter(F.col(id_col) < n_planes)
-        .select(id_col, F.col(vec_col).cast("array<double>").alias("v"))
-        .collect()
-    )
-    P = np.array(
-        [r.v for r in sorted(plane_rows, key=lambda r: r[id_col])], dtype=np.float64
-    )
-
-    @F.pandas_udf("string")
-    def _bucket(x: pd.Series) -> pd.Series:
-        A = np.vstack(x.to_numpy()).astype(np.float64)
-        # (rows, planes) fixed-point dots, sign → bit chars
-        dots = np.stack(
-            [
-                np.floor(A * P[j] * _SCALE).astype(np.int64).sum(axis=1)
-                for j in range(P.shape[0])
-            ],
-            axis=1,
-        )
-        bits = np.where(dots >= 0, "1", "0")
-        return pd.Series(["".join(row) for row in bits])
-
-    return vectors.select(
-        F.col(id_col),
-        _bucket(F.col(vec_col).cast("array<double>")).alias("bucket"),
-    )
-
-
 def bucketed_norm_corpus(
     vectors: DataFrame,
     n_planes: int = 8,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """(id, v, bucket, nrm) in ONE corpus scan and ONE Python hop.
+    """(id, v, bucket, nrm) in ONE corpus scan and ONE Python hop:
+    the hyperplane-LSH bucket and the exact norm of every non-NULL
+    vector.
 
-    Fuses :func:`bucket_by_seed_planes` with :func:`norm_exact_vec`
-    and drops the ``emb ⋈ buckets`` vec_id self-join the ANN queries
-    previously used to attach the bucket to the vector (guide §2.4 —
-    remove shuffles outright; §4.1 — the vector column crosses the
-    Arrow boundary once, not twice).  Bitwise-identical outputs: the
-    plane dots and the norm use the same floor-scaled int64 kernel as
-    the split form, and the inner join on the unique ``vec_id`` was a
-    no-op row-wise (both sides derive from the same NULL-filtered
-    scan), so (id, v, bucket, nrm) is row-for-row the old ``withb``.
+    The planes are the first ``n_planes`` corpus vectors (deterministic,
+    data-derived, no RNG): a tiny constant matrix, collected once at
+    plan-build time and closed over, so ONE map-only pandas UDF assigns
+    all bits per vector (no cross join, no re-aggregation shuffle).
+    Bit j is '1' when the fixed-point dot with plane j is ≥ 0.  The
+    bucket alone is ``.select(id, "bucket")``.  Carrying v and nrm here
+    spares the ANN queries an ``emb ⋈ buckets`` vec_id self-join and a
+    second Arrow hop (guide §2.4 — remove shuffles outright; §4.1 — the
+    vector column crosses the Arrow boundary once).
     """
-    import numpy as np
-
     vectors = drop_null_vectors(vectors, vec_col)
     plane_rows = (
         vectors.filter(F.col(id_col) < n_planes)
@@ -378,18 +286,13 @@ def bucketed_norm_corpus(
 
     @F.pandas_udf("bucket string, nrm double")
     def _bn(x: pd.Series) -> pd.DataFrame:
-        A = np.vstack(x.to_numpy()).astype(np.float64)
-        dots = np.stack(
-            [
-                np.floor(A * P[j] * _SCALE).astype(np.int64).sum(axis=1)
-                for j in range(P.shape[0])
-            ],
-            axis=1,
-        )
+        A = _matrix(x)
+        # (rows, planes) fixed-point dots, one plane at a time to keep
+        # the temporary at batch×dims; sign → bit chars
+        dots = np.stack([fixed_sum(A, p) for p in P], axis=1)
         bits = np.where(dots >= 0, "1", "0")
-        nrm = np.sqrt(np.floor(A * A * _SCALE).astype(np.int64).sum(axis=1) / _SCALE)
         return pd.DataFrame(
-            {"bucket": ["".join(row) for row in bits], "nrm": nrm}
+            {"bucket": ["".join(row) for row in bits], "nrm": fixed_norm(A)}
         )
 
     # The bucket equi-join infers an isnotnull(bucket) constraint; on
@@ -438,8 +341,8 @@ def bucket_pair_dots(
     come back (guide §8: move heavy bytes once, decide on proxies;
     §4.2: whole-group native kernels).
 
-    Bitwise-identical scores: per element floor((a·b)·1e12) → int64
-    sum → /1e12, the same operation sequence as :func:`dot_exact_vec`.
+    Bitwise-identical scores: the dot is :func:`fixed_sum` / 1e12,
+    exactly as in :func:`dot_exact_vec`.
     qn/cn pass through from the fused bucket+norm scan so the caller's
     ``dot / nullif(qn·cn, 0)`` cosine (NULL on zero norms) is the same
     JVM expression as before.
@@ -460,8 +363,6 @@ def bucket_pair_dots(
     the downstream ``row_number() ≤ k`` filter keeps exactly the same
     rows and re-ranks the survivors identically.
     """
-    import numpy as np
-
     empty = pd.DataFrame(
         {
             "bucket": pd.Series(dtype="str"),
@@ -488,12 +389,7 @@ def bucket_pair_dots(
         qs, cs, dts = [], [], []
         for s in range(0, n, chunk):
             e = min(n, s + chunk)
-            dots = (
-                np.floor(A[s:e, None, :] * A[None, :, :] * _SCALE)
-                .astype(np.int64)
-                .sum(axis=2)
-                / _SCALE
-            )
+            dots = fixed_sum(A[s:e, None, :], A[None, :, :]) / _SCALE
             qi = np.repeat(np.arange(s, e), n)
             ci = np.tile(np.arange(n), e - s)
             keep = ids[qi] != ids[ci]
@@ -551,9 +447,8 @@ def seed_cell_norm_corpus(
     n_cents: int = 8,
     id_col: str = "vec_id",
     vec_col: str = "v",
-    with_norm: bool = True,
 ) -> DataFrame:
-    """(id, v, cell, nrm?) in ONE corpus scan and ONE Python hop — the
+    """(id, v, cell, nrm) in ONE corpus scan and ONE Python hop — the
     IVF coarse quantizer fused with the per-vector norm.
 
     Replaces the crossJoin(broadcast(cents)) → per-(vec, cent) dot UDF
@@ -572,14 +467,12 @@ def seed_cell_norm_corpus(
       centroid → all tie → lowest cent_id wins, nrm NULL) — the IVF
       oracles do NOT null-filter, so neither does this kernel (unlike
       :func:`bucketed_norm_corpus`, whose oracles do);
-    * nrm is the same floor-scaled int64 kernel as norm_exact_vec.
+    * nrm is :func:`fixed_norm`, as in norm_exact_vec.
 
     coalesce(cell, first_cent_id) keeps the cell equi-join key
     statically non-null so the inferred isnotnull filter
     constant-folds instead of re-evaluating the UDF (guide §4.4).
     """
-    import numpy as np
-
     cent_rows = (
         vectors.filter(F.col(id_col) < n_cents)
         .select(id_col, F.col(vec_col).cast("array<double>").alias("cv"))
@@ -589,12 +482,12 @@ def seed_cell_norm_corpus(
     if not cent_rows:
         # no centroids → the old inner join on the (empty) assignment
         # produced an empty corpus; replay that exactly
-        out = vectors.select(id_col, vec_col).where(F.lit(False)).withColumn(
-            "cell", F.lit(None).cast("bigint")
-        )
-        if with_norm:
-            out = out.withColumn("nrm", F.lit(None).cast("double"))
-        return out
+        return vectors.select(
+            id_col,
+            vec_col,
+            F.lit(None).cast("bigint").alias("cell"),
+            F.lit(None).cast("double").alias("nrm"),
+        ).where(F.lit(False))
     cid_tags = np.asarray([r[id_col] for r in cent_rows], dtype=np.int64)
     # a NULL centroid's dp is NULL on every row → it sorts below every
     # real dp and can only win an all-NULL tie, where the LOWEST
@@ -617,94 +510,34 @@ def seed_cell_norm_corpus(
         cells = np.full(len(x), first_cid, dtype=np.int64)
         nrm = np.full(len(x), np.nan, dtype=np.float64)
         if valid.any():
-            A = np.vstack(x[valid].to_numpy()).astype(np.float64)
-            d = np.empty((A.shape[0], P.shape[0]), dtype=np.int64)
-            for j in range(P.shape[0]):
-                if null_cent[j]:
-                    d[:, j] = np.iinfo(np.int64).min
-                else:
-                    d[:, j] = (
-                        np.floor(A * P[j] * _SCALE).astype(np.int64).sum(axis=1)
-                    )
-            cells[valid] = cid_tags[np.argmax(d, axis=1)]
-            nrm[valid] = np.sqrt(
-                np.floor(A * A * _SCALE).astype(np.int64).sum(axis=1) / _SCALE
+            A = _matrix(x[valid])
+            d = np.stack(
+                [
+                    np.full(len(A), np.iinfo(np.int64).min) if null else fixed_sum(A, p)
+                    for p, null in zip(P, null_cent)
+                ],
+                axis=1,
             )
+            cells[valid] = cid_tags[np.argmax(d, axis=1)]
+            nrm[valid] = fixed_norm(A)
         return pd.DataFrame({"cell": cells, "nrm": nrm})
 
-    out_cols = [
-        F.col(id_col),
-        F.col(vec_col),
-        F.coalesce(F.col("__cn.cell"), F.lit(first_cid)).alias("cell"),
-    ]
-    if with_norm:
-        out_cols.append(F.col("__cn.nrm").alias("nrm"))
     return (
         vectors.select(id_col, vec_col)
         .withColumn("__cn", _cn(F.col(vec_col).cast("array<double>")))
-        .select(*out_cols)
+        .select(
+            id_col,
+            vec_col,
+            F.coalesce(F.col("__cn.cell"), F.lit(first_cid)).alias("cell"),
+            F.col("__cn.nrm").alias("nrm"),
+        )
     )
 
 
-def hyperplane_bucket(vec_col: Column, planes: list[list[float]]) -> Column:
-    """Sign-of-dot LSH bucket key: one char per hyperplane ('1'/'0').
+# UDF closures in this module must ship by value (see package __init__):
+# they call fixed_sum, which would otherwise pickle by reference
+import sys as _sys  # noqa: E402
 
-    Planes are plain float lists (deterministic, engine-portable —
-    derived by the caller, e.g. from seed vectors of the corpus
-    itself), so the oracle can rebuild identical buckets.
-    """
-    bits = []
-    for p in planes:
-        arr = F.array(*[F.lit(float(x)) for x in p])
-        bits.append(F.when(dot_exact(vec_col, arr) >= 0, F.lit("1")).otherwise(F.lit("0")))
-    return F.concat(*bits)
+from dicomdb_spark import register_for_udf_pickling as _reg  # noqa: E402
 
-
-def lsh_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    planes: list[list[float]],
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    k: int = 5,
-    broadcast_queries: bool = True,
-) -> DataFrame:
-    """ANN top-k restricted to same-LSH-bucket candidates.
-
-    Recall is approximate (that is the point); the join is an
-    equi-join on the bucket key — shuffle-partitioned, no cross
-    product, scales with bucket occupancy.
-
-    ``broadcast_queries``: right for a query batch ≪ corpus (map-side
-    join, corpus never shuffles).  Pass ``False`` for a large or
-    all-pairs query side — the bucket equi-join then shuffles both
-    sides instead of materializing the full query set on every
-    executor (a scale-killer when queries ~ corpus).
-    """
-    corpus = drop_null_vectors(corpus, vec_col)
-    queries = drop_null_vectors(queries, vec_col)
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("__qv"),
-        hyperplane_bucket(F.col(vec_col), planes).alias("bucket"),
-    )
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("__cv"),
-        hyperplane_bucket(F.col(vec_col), planes).alias("bucket"),
-    )
-    qside = F.broadcast(q) if broadcast_queries else q
-    scored = (
-        c.join(qside, "bucket")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn("cosine_sim", cosine_exact_vec(F.col("__qv"), F.col("__cv")))
-        .drop("__qv", "__cv")
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine_sim").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "bucket", "neighbor_id", "cosine_sim", "rank")
-    )
+_reg(_sys.modules[__name__])

@@ -60,3 +60,21 @@ def _dsum(expr: str, alias: str) -> str:
     return f"CAST(SUM(CAST(floor(({expr}) * 10000) AS BIGINT)) / 10000.0 AS DOUBLE) AS {alias}"
 
 
+# DuckDB twins of llm/similarity.fixed_sum: the fixed-point dot of the
+# ``v`` columns of aliases a and b, and the exact L2 norm
+_SQL_DOT = (
+    "(SELECT SUM(CAST(floor(a.v[i.i] * b.v[i.i] * 1e12) AS BIGINT)) "
+    "FROM unnest(range(1, len(a.v) + 1)) i(i)) / 1e12"
+)
+
+
+def _sql_norm(alias: str = "") -> str:
+    """sqrt of the fixed-point self-dot of ``alias.v`` (bare ``v`` when
+    no alias) — the twin of llm/similarity.fixed_norm."""
+    v = f"{alias}.v" if alias else "v"
+    return (
+        f"sqrt(CAST((SELECT SUM(CAST(floor({v}[i.i] * {v}[i.i] * 1e12) AS BIGINT)) "
+        f"FROM unnest(range(1, len({v}) + 1)) i(i)) / 1e12 AS DOUBLE))"
+    )
+
+

@@ -13,7 +13,14 @@ from dicomdb_spark.operators import aggregates as agg
 from dicomdb_spark.operators import joins as oj
 from dicomdb_spark.operators import windows as ow
 from dicomdb_spark.session import local_fanout
-from dicomdb_spark.registry._core import ORACLES, _dsum, _fanout, register
+from dicomdb_spark.registry._core import (
+    ORACLES,
+    _SQL_DOT,
+    _dsum,
+    _fanout,
+    _sql_norm,
+    register,
+)
 
 
 # ---------------------------------------------------------------------------
@@ -876,13 +883,12 @@ ORACLES["text_fingerprint"] = r"""
 
 @register(
     "ann_bruteforce_topk",
-    """
+    f"""
     WITH e AS (
       SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
     n AS (
       SELECT vec_id, v,
-             sqrt(CAST((SELECT SUM(CAST(floor(v[i.i] * v[i.i] * 1e12) AS BIGINT))
-                        FROM unnest(range(1, len(v) + 1)) i(i)) / 1e12 AS DOUBLE)) AS nrm
+             {_sql_norm()} AS nrm
       FROM e),
     pairs AS (
       SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
@@ -2063,13 +2069,6 @@ def corpus_clean(spark, sf_dir):
     )
 
 
-# dot-product fragment for the LSH oracle (floor-scaled exact ints)
-_SQL_DOT = (
-    "(SELECT SUM(CAST(floor(a.v[i.i] * b.v[i.i] * 1e12) AS BIGINT)) "
-    "FROM unnest(range(1, len(a.v) + 1)) i(i)) / 1e12"
-)
-
-
 @register(
     "ann_lsh_buckets",
     f"""
@@ -2078,7 +2077,7 @@ _SQL_DOT = (
     planes AS (SELECT vec_id AS plane_id, v FROM e WHERE vec_id < 8),
     bits AS (
       SELECT a.vec_id, b.plane_id,
-             CASE WHEN {_SQL_DOT.replace('b.v', 'b.v')} >= 0 THEN '1' ELSE '0' END AS bit
+             CASE WHEN {_SQL_DOT} >= 0 THEN '1' ELSE '0' END AS bit
       FROM e a CROSS JOIN planes b),
     buckets AS (
       SELECT vec_id, string_agg(bit, '' ORDER BY plane_id) AS bucket
@@ -2090,7 +2089,7 @@ def ann_lsh_buckets(spark, sf_dir):
     """Hyperplane-LSH bucket assignment; planes are the first 8 corpus
     vectors (deterministic, data-derived)."""
     emb = load_table(spark, sf_dir, "embeddings")
-    return lsim.bucket_by_seed_planes(emb, n_planes=8)
+    return lsim.bucketed_norm_corpus(emb, n_planes=8).select("vec_id", "bucket")
 
 
 @register(
@@ -2107,8 +2106,7 @@ def ann_lsh_buckets(spark, sf_dir):
       FROM bits GROUP BY 1),
     n AS (
       SELECT e.vec_id, e.v, bk.bucket,
-             sqrt(CAST((SELECT SUM(CAST(floor(e.v[i.i] * e.v[i.i] * 1e12) AS BIGINT))
-                        FROM unnest(range(1, len(e.v) + 1)) i(i)) / 1e12 AS DOUBLE)) AS nrm
+             {_sql_norm("e")} AS nrm
       FROM e JOIN buckets bk ON e.vec_id = bk.vec_id),
     scored AS (
       SELECT a.vec_id AS query_id, a.bucket, b.vec_id AS neighbor_id,
@@ -2172,8 +2170,7 @@ def ann_lsh_topk(spark, sf_dir):
       FROM bits GROUP BY 1),
     n AS (
       SELECT e.vec_id, e.v, bk.bucket,
-             sqrt(CAST((SELECT SUM(CAST(floor(e.v[i.i] * e.v[i.i] * 1e12) AS BIGINT))
-                        FROM unnest(range(1, len(e.v) + 1)) i(i)) / 1e12 AS DOUBLE)) AS nrm
+             {_sql_norm("e")} AS nrm
       FROM e JOIN buckets bk ON e.vec_id = bk.vec_id),
     stage1 AS (
       SELECT query_id, neighbor_id, cosine_sim
@@ -3499,13 +3496,6 @@ def a2_seqname_catalog(spark, sf_dir):
 # Batch 6 — IVF ANN, embedding near-dup, quantiles, pivot, rollup
 # ---------------------------------------------------------------------------
 
-# floor-int dot fragment over aliases a/b (see _SQL_DOT)
-_SQL_DOT_AB = (
-    "(SELECT SUM(CAST(floor(a.v[i.i] * b.v[i.i] * 1e12) AS BIGINT)) "
-    "FROM unnest(range(1, len(a.v) + 1)) i(i)) / 1e12"
-)
-
-
 @register(
     "ann_ivf_topk",
     f"""
@@ -3513,7 +3503,7 @@ _SQL_DOT_AB = (
     cents AS (SELECT vec_id AS cent_id, v FROM e WHERE vec_id < 8),
     scored_cent AS (
       SELECT a.vec_id, b.cent_id,
-             {_SQL_DOT_AB.replace('b.v', 'b.v')} AS dp
+             {_SQL_DOT} AS dp
       FROM e a CROSS JOIN cents b),
     assign AS (
       SELECT vec_id, cent_id FROM (
@@ -3522,12 +3512,11 @@ _SQL_DOT_AB = (
         FROM scored_cent) t WHERE rn = 1),
     n AS (
       SELECT e.vec_id, e.v, asg.cent_id,
-             sqrt(CAST((SELECT SUM(CAST(floor(e.v[i.i] * e.v[i.i] * 1e12) AS BIGINT))
-                        FROM unnest(range(1, len(e.v) + 1)) i(i)) / 1e12 AS DOUBLE)) AS nrm
+             {_sql_norm("e")} AS nrm
       FROM e JOIN assign asg ON e.vec_id = asg.vec_id),
     scored AS (
       SELECT a.vec_id AS query_id, a.cent_id, b.vec_id AS neighbor_id,
-             CAST({_SQL_DOT_AB} AS DOUBLE) / (a.nrm * b.nrm) AS cosine_sim
+             CAST({_SQL_DOT} AS DOUBLE) / (a.nrm * b.nrm) AS cosine_sim
       FROM n a JOIN n b ON a.cent_id = b.cent_id AND a.vec_id <> b.vec_id)
     SELECT query_id, cent_id, neighbor_id, cosine_sim, CAST(rank AS INTEGER) AS rank
     FROM (SELECT *, row_number() OVER (PARTITION BY query_id
@@ -3617,12 +3606,11 @@ def _emb_with_dupes(spark, sf_dir):
     WITH {_SQL_EMB_BASE},
     n AS (
       SELECT vec_id, v,
-             sqrt(CAST((SELECT SUM(CAST(floor(v2.v[i.i] * v2.v[i.i] * 1e12) AS BIGINT))
-                        FROM unnest(range(1, len(v2.v) + 1)) i(i)) / 1e12 AS DOUBLE)) AS nrm
+             {_sql_norm("v2")} AS nrm
       FROM base v2),
     pairs AS (
       SELECT a.vec_id AS id1, b.vec_id AS id2,
-             CAST({_SQL_DOT_AB} AS DOUBLE) / (a.nrm * b.nrm) AS cosine_sim
+             CAST({_SQL_DOT} AS DOUBLE) / (a.nrm * b.nrm) AS cosine_sim
       FROM n a JOIN n b ON a.vec_id < b.vec_id)
     SELECT id1, id2, cosine_sim FROM pairs WHERE cosine_sim >= 0.99
     """,
@@ -3641,14 +3629,14 @@ def dedup_embedding_cosine(spark, sf_dir):
     old plan materialized ~26M pair ROWS each carrying two 64-dim
     vectors across the Arrow boundary (~27 GB of boundary traffic at
     sf0.1); each vector now crosses ~(B+1) times (~0.1 % of that).
-    Arithmetic is bit-identical: the tile kernel computes the same
-    per-element floor(a·b·1e12) int64 sums (_SCALE kernel) and the
-    same nrm1·nrm2 division; zero/NULL denominators are dropped
-    exactly like the old NULL-cosine rows."""
+    Arithmetic is bit-identical: the tile kernel scores with the same
+    llm/similarity.fixed_sum as every other cosine and the same
+    nrm1·nrm2 division; zero/NULL denominators are dropped exactly
+    like the old NULL-cosine rows."""
     import numpy as np
     import pandas as pd
 
-    from dicomdb_spark.llm.similarity import _SCALE
+    from dicomdb_spark.llm.similarity import _SCALE, fixed_sum
 
     nblk = 32
 
@@ -3682,12 +3670,7 @@ def dedup_embedding_cosine(spark, sf_dir):
                 den = na[:, None] * nb[None, :]
                 for lo in range(0, len(ia), 128):  # bound tile memory
                     Ac, iac, dc = A[lo:lo + 128], ia[lo:lo + 128], den[lo:lo + 128]
-                    dots = (
-                        np.floor(Ac[:, None, :] * Bm[None, :, :] * _SCALE)
-                        .astype(np.int64)
-                        .sum(axis=2)
-                        / _SCALE
-                    )
+                    dots = fixed_sum(Ac[:, None, :], Bm[None, :, :]) / _SCALE
                     with np.errstate(divide="ignore", invalid="ignore"):
                         cos = dots / dc
                     mask = (dc != 0.0) & (cos >= 0.99)
@@ -3771,13 +3754,12 @@ def _semantic_dedup_oracle(k: int = 8, iters: int = 2, threshold: float = 0.99) 
     {joined_ctes},
     n AS (
       SELECT vec_id, v, cid,
-             sqrt(CAST((SELECT SUM(CAST(floor(v2.v[i.i] * v2.v[i.i] * 1e12) AS BIGINT))
-                        FROM unnest(range(1, len(v2.v) + 1)) i(i)) / 1e12 AS DOUBLE)) AS nrm
+             {_sql_norm("v2")} AS nrm
       FROM {final} v2)
     SELECT a.vec_id AS id1, b.vec_id AS id2, a.cid,
-           CAST({_SQL_DOT_AB} AS DOUBLE) / (a.nrm * b.nrm) AS cosine_sim
+           CAST({_SQL_DOT} AS DOUBLE) / (a.nrm * b.nrm) AS cosine_sim
     FROM n a JOIN n b ON a.cid = b.cid AND a.vec_id < b.vec_id
-    WHERE CAST({_SQL_DOT_AB} AS DOUBLE) / (a.nrm * b.nrm) >= {threshold}
+    WHERE CAST({_SQL_DOT} AS DOUBLE) / (a.nrm * b.nrm) >= {threshold}
     """
 
 
@@ -3788,12 +3770,11 @@ def _ivf_trained_oracle(k: int = 8, iters: int = 2, n_queries: int = 10, topk: i
     {joined_ctes},
     n AS (
       SELECT vec_id, v, cid,
-             sqrt(CAST((SELECT SUM(CAST(floor(v2.v[i.i] * v2.v[i.i] * 1e12) AS BIGINT))
-                        FROM unnest(range(1, len(v2.v) + 1)) i(i)) / 1e12 AS DOUBLE)) AS nrm
+             {_sql_norm("v2")} AS nrm
       FROM {final} v2),
     scored AS (
       SELECT a.vec_id AS query_id, a.cid, b.vec_id AS neighbor_id,
-             CAST({_SQL_DOT_AB} AS DOUBLE) / (a.nrm * b.nrm) AS cosine_sim
+             CAST({_SQL_DOT} AS DOUBLE) / (a.nrm * b.nrm) AS cosine_sim
       FROM n a JOIN n b
         ON a.cid = b.cid AND a.vec_id < {n_queries} AND a.vec_id <> b.vec_id)
     SELECT query_id, cid, neighbor_id, cosine_sim, CAST(rank AS INTEGER) AS rank
@@ -3812,15 +3793,15 @@ def ann_ivf_trained_topk(spark, sf_dir):
     searches only its own cell (nprobe=1) — candidates meet via an
     equi-join on the cell id.  Composes the clustering trainer with
     the ANN path; the oracle replays training + search end-to-end."""
-    from dicomdb_spark.llm.clustering import assign_clusters_with_norm, kmeans_fit
+    from dicomdb_spark.llm.clustering import assign_clusters, kmeans_fit
 
     emb = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", F.col("embedding").cast("array<double>").alias("v")
     )
     cents = kmeans_fit(emb, "vec_id", "v", k=8, iters=2)
-    # fused assign+norm: one Arrow hop per join side instead of assign
-    # + a separate norm pass (r13 optimization, guide §4.1)
-    n = assign_clusters_with_norm(emb, cents, "vec_id", "v")
+    # the assignment carries the norm: one Arrow hop per join side
+    # instead of assign + a separate norm pass (guide §4.1)
+    n = assign_clusters(emb, cents, "vec_id", "v")
     q = n.filter(F.col("vec_id") < 10).select(
         F.col("vec_id").alias("query_id"),
         F.col("v").alias("__qv"),

@@ -13,11 +13,10 @@ from dicomdb_spark.operators import aggregates as agg
 from dicomdb_spark.operators import joins as oj
 from dicomdb_spark.operators import windows as ow
 from dicomdb_spark.session import local_fanout
-from dicomdb_spark.registry._core import _dsum, _fanout, register
+from dicomdb_spark.registry._core import _SQL_DOT, _dsum, _fanout, _sql_norm, register
 from dicomdb_spark.registry.q01 import (
     _DUPSPAN_N,
     _SQL_DOCS2,
-    _SQL_DOT_AB,
     _SQL_GRAM8,
     _SQL_SHINGLES,
     _SQL_TOKS,
@@ -842,7 +841,7 @@ def _pq_oracle(
         )
         ctes.append(
             f"""cellscore AS (
-      SELECT a.vec_id, b.cid0, {_SQL_DOT_AB.replace('b.v', 'b.v')} AS dp
+      SELECT a.vec_id, b.cid0, {_SQL_DOT} AS dp
       FROM base a CROSS JOIN (SELECT cid0, v FROM cents) b)"""
         )
         ctes.append(
@@ -3769,9 +3768,7 @@ def ann_ivf_pq_topk(spark, sf_dir):
     # carried through the subspace explode row-locally — was
     # crossJoin×8 → dot UDF → window → a codes ⋈ assign vec_id join
     # (r13 optimization, guide §2.4/§4.1)
-    n = lsim.seed_cell_norm_corpus(
-        emb, n_cents=8, id_col="vec_id", vec_col="v", with_norm=False
-    )
+    n = lsim.seed_cell_norm_corpus(emb, n_cents=8, id_col="vec_id", vec_col="v")
     books = pq.train_codebooks(emb, "vec_id", "v", m=4, sub_dim=16, k=8, iters=1)
     codes = pq.encode(n, books, "vec_id", "v", sub_dim=16, extra_cols=("cell",))
     lut = pq.adc_lut(
@@ -3966,15 +3963,14 @@ def layout_compaction_bins(spark, sf_dir):
     planes AS (SELECT vec_id AS plane_id, v FROM e WHERE vec_id < 8),
     bits AS (
       SELECT a.vec_id, b.plane_id,
-             CASE WHEN {{dot}} >= 0 THEN '1' ELSE '0' END AS bit
+             CASE WHEN {_SQL_DOT} >= 0 THEN '1' ELSE '0' END AS bit
       FROM e a CROSS JOIN planes b),
     buckets AS (
       SELECT vec_id, string_agg(bit, '' ORDER BY plane_id) AS bucket
       FROM bits GROUP BY 1),
     n AS (
       SELECT e.vec_id, e.v, bk.bucket,
-             sqrt(CAST((SELECT SUM(CAST(floor(e.v[i.i] * e.v[i.i] * 1e12) AS BIGINT))
-                        FROM unnest(range(1, len(e.v) + 1)) i(i)) / 1e12 AS DOUBLE)) AS nrm
+             {_sql_norm("e")} AS nrm
       FROM e JOIN buckets bk ON e.vec_id = bk.vec_id),
     probes AS (
       SELECT vec_id, v, nrm,
@@ -3997,11 +3993,7 @@ def layout_compaction_bins(spark, sf_dir):
                                        ORDER BY cosine_sim DESC, neighbor_id) AS rank
           FROM scored) t
     WHERE rank <= 3
-    """.replace(
-        "{dot}",
-        "(SELECT SUM(CAST(floor(a.v[i.i] * b.v[i.i] * 1e12) AS BIGINT)) "
-        "FROM unnest(range(1, len(a.v) + 1)) i(i)) / 1e12",
-    ),
+    """,
 )
 def ann_lsh_multiprobe_topk(spark, sf_dir):
     """Multi-probe LSH ANN (Lv et al., VLDB 2007): each query (vec_id

@@ -14,10 +14,15 @@ from dicomdb_spark.operators import aggregates as agg
 from dicomdb_spark.operators import joins as oj
 from dicomdb_spark.operators import windows as ow
 from dicomdb_spark.session import local_fanout
-from dicomdb_spark.registry._core import ORACLES, QUERIES, _fanout, register
-from dicomdb_spark.registry.q01 import (
+from dicomdb_spark.registry._core import (
+    ORACLES,
+    QUERIES,
     _SQL_DOT,
-    _SQL_DOT_AB,
+    _fanout,
+    _sql_norm,
+    register,
+)
+from dicomdb_spark.registry.q01 import (
     _SQL_EMB_BASE,
     _SQL_SHINGLES,
     _SQL_TOKS,
@@ -239,13 +244,12 @@ def _semantic_pipeline_oracle(iters: int = 3) -> str:
     WITH {_SQL_EMB_BASE},
     n AS (
       SELECT vec_id, v,
-             sqrt(CAST((SELECT SUM(CAST(floor(v2.v[i.i] * v2.v[i.i] * 1e12) AS BIGINT))
-                        FROM unnest(range(1, len(v2.v) + 1)) i(i)) / 1e12 AS DOUBLE)) AS nrm
+             {_sql_norm("v2")} AS nrm
       FROM base v2),
     pairs AS (
       SELECT a.vec_id AS id1, b.vec_id AS id2
       FROM n a JOIN n b ON a.vec_id < b.vec_id
-      WHERE CAST({_SQL_DOT_AB} AS DOUBLE) / (a.nrm * b.nrm) >= 0.99),
+      WHERE CAST({_SQL_DOT} AS DOUBLE) / (a.nrm * b.nrm) >= 0.99),
     verts AS (SELECT DISTINCT vec_id FROM (
       SELECT id1 AS vec_id FROM pairs UNION ALL SELECT id2 FROM pairs) t),
     e AS (SELECT id1 AS src, id2 AS dst FROM pairs
@@ -2337,8 +2341,7 @@ def o6_hypothetical_rank(spark, sf_dir):
       FROM bits GROUP BY 1),
     n AS (
       SELECT e.vec_id, e.v, bk.bucket,
-             sqrt(CAST((SELECT SUM(CAST(floor(e.v[i.i] * e.v[i.i] * 1e12) AS BIGINT))
-                        FROM unnest(range(1, len(e.v) + 1)) i(i)) / 1e12 AS DOUBLE)) AS nrm
+             {_sql_norm("e")} AS nrm
       FROM e JOIN buckets bk ON e.vec_id = bk.vec_id),
     truth AS (
       SELECT query_id, neighbor_id FROM (

@@ -14,10 +14,16 @@ from dicomdb_spark.operators import aggregates as agg
 from dicomdb_spark.operators import joins as oj
 from dicomdb_spark.operators import windows as ow
 from dicomdb_spark.session import local_fanout
-from dicomdb_spark.registry._core import ORACLES, QUERIES, _fanout, register
+from dicomdb_spark.registry._core import (
+    ORACLES,
+    QUERIES,
+    _SQL_DOT,
+    _fanout,
+    _sql_norm,
+    register,
+)
 from dicomdb_spark.registry.q01 import (
     _SQL_DOCS2,
-    _SQL_DOT,
     _SQL_TOKS,
     _SQL_TOKS_RAW,
     _docs_with_dupes,
@@ -748,8 +754,7 @@ def ml_decision_stump(spark, sf_dir):
       FROM e JOIN documents d ON e.vec_id = d.doc_id),
     n AS (
       SELECT vec_id, v, lang,
-             sqrt(CAST((SELECT SUM(CAST(floor(v[i.i] * v[i.i] * 1e12) AS BIGINT))
-                        FROM unnest(range(1, len(v) + 1)) i(i)) / 1e12 AS DOUBLE)) AS nrm
+             {_sql_norm()} AS nrm
       FROM lab),
     sc AS (
       SELECT a.vec_id AS query_id, a.lang AS true_lang,

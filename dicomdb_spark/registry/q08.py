@@ -14,7 +14,7 @@ from dicomdb_spark.operators import aggregates as agg
 from dicomdb_spark.operators import joins as oj
 from dicomdb_spark.operators import windows as ow
 from dicomdb_spark.session import local_fanout
-from dicomdb_spark.registry._core import register
+from dicomdb_spark.registry._core import _sql_norm, register
 from dicomdb_spark.registry.q03 import _sql_hex_int
 from dicomdb_spark.registry.q04 import _SQL_NORMSQ, _normsq_col
 from dicomdb_spark.registry.q06 import _SQL_DAYSERIES, _dayseries_rk
@@ -430,14 +430,13 @@ def a_cochran_armitage(spark, sf_dir):
 
 @register(
     "ann_metric_agreement",
-    """
+    f"""
     WITH e AS (
       SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
       WHERE embedding IS NOT NULL),
     n AS (
       SELECT vec_id, v,
-             sqrt(CAST((SELECT SUM(CAST(floor(v[i.i] * v[i.i] * 1e12) AS BIGINT))
-                        FROM unnest(range(1, len(v) + 1)) i(i)) / 1e12 AS DOUBLE)) AS nrm
+             {_sql_norm()} AS nrm
       FROM e),
     pairs AS (
       SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,

@@ -56,7 +56,7 @@ def session_conf(
     ``dicomdb_spark.worker_daemon`` (``pyspark.daemon`` without the
     per-task zip-archive re-reads), and the package root is appended to
     the workers' PYTHONPATH, after any caller value.  Other masters keep
-    the stock daemon, so executors never need the package.
+    the stock ``pyspark.daemon``, so executors never need the package.
     """
     conf = {
         "spark.sql.shuffle.partitions": str(shuffle_partitions),
@@ -80,10 +80,16 @@ def session_conf(
         # shuffling the fact side.
         "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
     }
-    if os.environ.get("SPARK_GRAFT_CHECKPOINT_DIR"):
-        # reliable cut_lineage checkpoints: delete a round's files once
-        # its RDD is garbage-collected, not at the end of the run
-        conf["spark.cleaner.referenceTracking.cleanCheckpoints"] = "true"
+    # Both keys below are set on every master, to Spark's default where
+    # they do not apply: the first session's conf becomes JVM system
+    # properties, which a later session in the same process inherits
+    # for any key it leaves unset.
+    # Reliable cut_lineage checkpoints: delete a round's files once its
+    # RDD is garbage-collected, not at the end of the run.
+    conf["spark.cleaner.referenceTracking.cleanCheckpoints"] = (
+        "true" if os.environ.get("SPARK_GRAFT_CHECKPOINT_DIR") else "false"
+    )
+    conf["spark.python.daemon.module"] = "pyspark.daemon"
     conf.update(extra_conf or {})
     if is_local_master(master):
         conf["spark.python.daemon.module"] = "dicomdb_spark.worker_daemon"

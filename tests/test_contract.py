@@ -208,18 +208,19 @@ def test_selfcheck_exits_nonzero_on_failure(spark, monkeypatch, tmp_path):
 def test_selfcheck_from_foreign_cwd(tmp_path):
     """selfcheck started outside the repo with no PYTHONPATH: its
     session keeps the stock Python worker daemon, so the workers cannot
-    import the package and every pandas UDF a source query ships must
-    pickle by value (the xlsx reader, the stack-assembly kernel)."""
+    import the package and every pandas UDF a query ships must pickle
+    by value (the xlsx reader, the stack-assembly kernel, and the
+    llm/similarity fixed-point kernel under the LSH and k-means UDFs)."""
     import os
     import subprocess
 
     repo = Path(__file__).resolve().parents[1]
     env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
-    env["SELFCHECK_DRIVER_MEM"] = "2g"  # two queries need no 12g heap
+    env["SELFCHECK_DRIVER_MEM"] = "2g"  # four queries need no 12g heap
     run = subprocess.run(
-        [sys.executable, str(repo / "selfcheck.py"),
-         "s4_xlsx_roundtrip", "u3_stack_assembly"],
+        [sys.executable, str(repo / "selfcheck.py"), "s4_xlsx_roundtrip",
+         "u3_stack_assembly", "ann_lsh_topk", "dedup_semantic_kmeans"],
         cwd=tmp_path, env=env, capture_output=True, text=True, timeout=600,
     )
     assert run.returncode == 0, run.stdout[-3000:] + run.stderr[-3000:]
-    assert "2 queries: ALL MATCH" in run.stdout, run.stdout[-3000:]
+    assert "4 queries: ALL MATCH" in run.stdout, run.stdout[-3000:]

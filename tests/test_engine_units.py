@@ -1098,22 +1098,6 @@ def test_xlsx_reader_pickles_by_value():
     assert xlsx.__name__ in cloudpickle.list_registry_pickle_by_value()
 
 
-def test_hyperplane_bucket_literal_planes(spark):
-    from dicomdb_spark.llm.similarity import hyperplane_bucket
-
-    df = spark.createDataFrame(
-        [Row(v=[1.0, 0.0]), Row(v=[-1.0, 0.0]), Row(v=[0.5, -2.0])]
-    )
-    planes = [[1.0, 0.0], [0.0, 1.0]]
-    out = [
-        r.b
-        for r in df.select(
-            hyperplane_bucket(F.col("v").cast("array<double>"), planes).alias("b")
-        ).collect()
-    ]
-    assert out == ["11", "01", "10"]
-
-
 def test_duplicated_spans_boundaries(spark):
     """Two docs share one 10-token run -> one maximal span each at the
     right 0-based inclusive positions; unique text yields no spans."""
@@ -1642,8 +1626,8 @@ def test_local_session_from_foreign_cwd(tmp_path):
 
 def test_session_conf_daemon_only_on_local_masters():
     """local/local[N] get the worker daemon and the package root last on
-    the workers' PYTHONPATH; local-cluster and real masters keep the
-    stock daemon and the caller's PYTHONPATH."""
+    the workers' PYTHONPATH; local-cluster and real masters name the
+    stock daemon and keep the caller's PYTHONPATH."""
     from dicomdb_spark import session
 
     for master in ("local", "local[2]", "local[*]"):
@@ -1652,37 +1636,96 @@ def test_session_conf_daemon_only_on_local_masters():
         assert conf["spark.executorEnv.PYTHONPATH"] == os.pathsep.join(["/a", session._PACKAGE_ROOT])
     for master in ("local-cluster[2,1,1024]", "spark://host:7077", "yarn", "k8s://host"):
         conf = session.session_conf(master, 2, {"spark.executorEnv.PYTHONPATH": "/a"})
-        assert "spark.python.daemon.module" not in conf
+        assert conf["spark.python.daemon.module"] == "pyspark.daemon"
         assert conf["spark.executorEnv.PYTHONPATH"] == "/a"
         assert "spark.executorEnv.PYTHONPATH" not in session.session_conf(master, 2)
 
 
 def test_reliable_checkpoints_are_cleaned(tmp_path):
     """With SPARK_GRAFT_CHECKPOINT_DIR set, the session deletes reliable
-    checkpoint files of collected RDDs; unset, the conf stays Spark's
-    default.  One session per process: a SparkConf outlives stop()."""
+    checkpoint files of collected RDDs; unset, the conf says Spark's
+    default.  A session rebuilt in the same process after stop() with
+    the variable unset must not inherit the first session's value (a
+    SparkConf outlives stop() as JVM system properties)."""
     import subprocess
 
     script = (
-        "import sys; sys.path.insert(0, sys.argv[1])\n"
+        "import os, sys; sys.path.insert(0, sys.argv[1])\n"
         "from dicomdb_spark.session import get_spark\n"
-        "s = get_spark('ck_clean', 'local[1]', 1)\n"
-        "print('RESULT', s.sparkContext.getConf()"
+        "for _ in range(2):\n"
+        "    s = get_spark('ck_clean', 'local[1]', 1)\n"
+        "    print('RESULT', s.sparkContext.getConf()"
         ".get('spark.cleaner.referenceTracking.cleanCheckpoints'))\n"
-        "s.stop()\n"
+        "    s.stop()\n"
+        "    os.environ.pop('SPARK_GRAFT_CHECKPOINT_DIR', None)\n"
     )
     repo = str(Path(__file__).resolve().parents[1])
     env = {k: v for k, v in os.environ.items() if k != "SPARK_GRAFT_CHECKPOINT_DIR"}
 
     def clean_conf():
-        return subprocess.run(
+        out = subprocess.run(
             [sys.executable, "-c", script, repo], cwd=tmp_path, env=env, check=True,
             text=True, capture_output=True, timeout=300,
-        ).stdout.split("RESULT ")[-1].strip()
+        ).stdout
+        return [line.split("RESULT ")[-1].strip() for line in out.splitlines()
+                if line.startswith("RESULT ")]
 
-    assert clean_conf() == "None"
+    assert clean_conf() == ["false", "false"]
     env["SPARK_GRAFT_CHECKPOINT_DIR"] = str(tmp_path / "ck")
-    assert clean_conf() == "true"
+    assert clean_conf() == ["true", "false"]
+
+
+def test_fixed_sum_matches_duckdb_fragments():
+    """The one fixed-point kernel (similarity.fixed_sum / fixed_norm)
+    equals the DuckDB oracle fragments (_SQL_DOT, _sql_norm) bit for
+    bit on hostile vectors: signed zeros, subnormals (a negative
+    subnormal product floors to -1 only in the (a·b)·1e12 order),
+    mixed signs, dims 1 and 64, and magnitudes at the int64 edge."""
+    import duckdb
+    import numpy as np
+
+    from dicomdb_spark.llm.similarity import _SCALE, fixed_norm, fixed_sum
+    from dicomdb_spark.registry._core import _SQL_DOT, _sql_norm
+
+    tiny = 5e-324
+    rng = np.random.default_rng(7)
+    # |a·b|·1e12·dims < 2^63: 3036² · 1e12 (dims 1), 379² · 1e12 · 64
+    big1, big64 = 3036.0, 379.0
+    pairs = [
+        ([0.0], [-0.0]),
+        ([-0.0], [-0.0]),
+        ([-tiny], [0.5]),
+        ([-tiny], [1.0]),
+        ([tiny], [-1.0]),
+        ([-2.2250738585072014e-308], [3.0]),
+        ([big1], [big1]),
+        ([-big1], [big1]),
+        ([1e-13], [-1.0]),
+        ([0.1], [0.2]),
+        ([big64] * 64, [big64] * 64),
+        ([big64, -big64] * 32, [big64] * 64),
+        ([-tiny, tiny] * 32, [0.5, -0.5] * 32),
+        ([0.0, -0.0] * 32, [-1.0] * 64),
+    ] + [
+        (list(rng.normal(scale=s, size=d)), list(rng.normal(scale=s, size=d)))
+        for d in (1, 64)
+        for s in (1e-7, 1.0, 50.0)
+    ]
+    con = duckdb.connect()
+    for a, b in pairs:
+        dot_sql, na_sql = con.execute(
+            f"SELECT CAST({_SQL_DOT} AS DOUBLE), {_sql_norm('a')} "
+            "FROM (SELECT CAST(? AS DOUBLE[]) AS v) a, "
+            "(SELECT CAST(? AS DOUBLE[]) AS v) b",
+            [a, b],
+        ).fetchone()
+        A, B = np.asarray([a]), np.asarray([b])
+        dot_np = float(fixed_sum(A, B)[0] / _SCALE)
+        na_np = float(fixed_norm(A)[0])
+        assert dot_np.hex() == dot_sql.hex(), (a, b, dot_np, dot_sql)
+        assert na_np.hex() == na_sql.hex(), (a, na_np, na_sql)
+    # the order is load-bearing: x·(y·1e12) floors this pair to -1
+    assert fixed_sum(np.asarray([-tiny]), np.asarray([0.5])) == 0
 
 
 def test_bucket_pair_dots_topk_prune_matches_window(spark):

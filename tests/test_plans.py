@@ -89,30 +89,6 @@ def test_ann_topk_is_single_shuffle(spark):
     assert not pi.has_sort_merge_join(df)
 
 
-def test_lsh_topk_broadcast_is_conditional(spark):
-    # small query batch → broadcast; large/all-pairs query side must
-    # NOT materialize on every executor (plain shuffled equi-join)
-    from dicomdb_spark.io import load_table
-    from dicomdb_spark.llm import similarity as lsim
-
-    emb = load_table(spark, SF, "embeddings")
-    planes = [[1.0] * 64, [-1.0] * 64]
-    queries = emb.limit(5)
-    small = lsim.lsh_topk(emb, queries, planes)
-    assert pi.count_broadcast_joins(small) >= 1
-    # disable auto-broadcast so the plan reflects only the hint: with
-    # broadcast_queries=False no broadcast join may appear (at real
-    # scale the threshold excludes a corpus-sized side by itself)
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        large = lsim.lsh_topk(emb, emb, planes, broadcast_queries=False)
-        assert pi.count_broadcast_joins(large) == 0, pi.simple_plan(large)
-        assert "BroadcastNestedLoopJoin" not in pi.formatted_plan(large)
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-
-
 def test_asof_join_is_single_shuffle(spark):
     # union-and-carry-forward: ONE exchange (the per-key window), no
     # join operator at all in the plan
