@@ -37,14 +37,18 @@ def entry(spark: SparkSession) -> DataFrame:
 # module a query runs, puts the query's name at the head; a name leaves
 # once a newer CORRECTNESS_r{N}.json row shows it matching.
 FRONT: tuple[str, ...] = (
+    # one spelling of the fixed-point SQL dot and squared distance
+    # (registry._core._sql_dot / _sql_dist2) and of its Catalyst fold
+    # (llm/similarity.fixed_dist2_col): the queries that use them
+    "ann_bruteforce_topk", "ann_mips_topk", "ann_lsh_multiprobe_topk",
+    "ann_metric_agreement", "dedup_semantic_kmeans", "ann_ivf_trained_topk",
+    "ann_pq_topk", "ann_ivf_pq_topk", "emb_random_projection_jl",
     # one fixed-point kernel (llm/similarity.fixed_sum) under every
-    # dot/norm/distance UDF: the queries that reach it
-    "ann_bruteforce_topk", "ann_lsh_buckets", "ann_lsh_topk",
+    # dot/norm/distance UDF: the other queries that reach it
+    "ann_lsh_buckets", "ann_lsh_topk",
     "ann_rerank_topk", "multimodal_ann", "ann_ivf_topk",
-    "dedup_embedding_cosine", "ann_ivf_trained_topk", "dedup_semantic_kmeans",
-    "ann_pq_topk", "ann_mips_topk", "ann_ivf_pq_topk", "ann_lsh_multiprobe_topk",
+    "dedup_embedding_cosine",
     "corpus_semantic_dedup_pipeline", "ann_recall_eval", "ml_knn_classify",
-    "ann_metric_agreement",
     # serie-frame exam linkage in the stack kernel; by-value xlsx UDF
     "u3_stack_assembly", "e1_import_pipeline", "s4_xlsx_roundtrip",
     # NULL-row guards, lineage cuts and kernel/persist rewrites that

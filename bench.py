@@ -8,7 +8,8 @@ With no names, prints ONE JSON line last:
 
 With names, times only those queries (same ``run_query``: min-of-3
 noop writes, plus plan-build and rep-1 cold seconds) and prints one
-line per query; no idle guard, headline or scale tiers.
+line per query (plus the classes it compiled); no idle guard,
+headline or scale tiers.
 
 Execution is measured with the noop sink (full plan runs distributed,
 no driver-side collect cost).  Queries chosen to span the engine's
@@ -25,6 +26,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from dicomdb_spark.plans.introspection import codegen_counters  # noqa: E402
 from dicomdb_spark.registry import QUERIES  # noqa: E402
 from dicomdb_spark.session import get_spark  # noqa: E402
 
@@ -147,7 +149,12 @@ def run_query(
     codegen-heavy plans (the 16-min-agg minhash signature) rep 2 still
     carries residual JIT — measured 4.8 / 1.3 / 1.0 s — so min-of-2
     overstates steady state by ~30 % exactly on the plans where it
-    matters most.
+    matters most.  That first-run cost is paid once per JVM only while
+    the generated classes stay cached: under Spark's default 100-entry
+    codegen cache a session that ran other queries in between evicted
+    and recompiled them on every repeat (``session.CODEGEN_CACHE_ENTRIES``
+    and PERFORMANCE.md note 5); ``detail``'s ``codegen_compiles`` /
+    ``codegen_ms`` show what a query still compiles.
 
     Measurement-contract fix (r13 VERDICT #3, additions only): the
     DataFrame CONSTRUCTION below runs outside the write timer, and the
@@ -157,6 +164,7 @@ def run_query(
     write time are recorded alongside, keeping those queries
     regression-detectable.  The returned min-of-N and the headline
     "queries"/"value" definitions are UNCHANGED from r01..r13."""
+    compiles0, compile_ms0 = codegen_counters(spark)
     t_build0 = time.perf_counter()
     df = QUERIES[name](spark, sf_dir)
     build_s = time.perf_counter() - t_build0
@@ -172,6 +180,9 @@ def run_query(
     if detail is not None:
         detail["build"] = round(build_s, 4)
         detail["cold"] = round(cold if cold is not None else -1.0, 4)
+        compiles1, compile_ms1 = codegen_counters(spark)
+        detail["codegen_compiles"] = compiles1 - compiles0
+        detail["codegen_ms"] = round(compile_ms1 - compile_ms0, 1)
     # drop this query's persisted datasets before the next one: leaked
     # cache blocks from earlier queries squeeze executor storage memory
     # and fake 2-3× regressions on later CPU-bound entries (measured:
@@ -281,7 +292,8 @@ def scale_ratios(
 
 
 def time_queries(names: list[str], sf_dir: str) -> None:
-    """One line per named query: min-of-3 noop seconds, build, cold."""
+    """One line per named query: min-of-3 noop seconds, build, cold, and
+    the classes it compiled (with their compile milliseconds)."""
     unknown = [n for n in names if n not in QUERIES]
     if unknown:
         sys.exit(f"not registered: {' '.join(unknown)}")
@@ -289,7 +301,10 @@ def time_queries(names: list[str], sf_dir: str) -> None:
     for name in names:
         d: dict = {}
         best = run_query(spark, name, sf_dir, detail=d)
-        print(f"{name:34s} min={best:.3f}  build={d['build']:.3f}  cold={d['cold']:.3f}")
+        print(
+            f"{name:34s} min={best:.3f}  build={d['build']:.3f}  cold={d['cold']:.3f}"
+            f"  codegen_compiles={d['codegen_compiles']}  codegen_ms={d['codegen_ms']:.1f}"
+        )
 
 
 def main(names: list[str] | None = None) -> None:
@@ -313,6 +328,7 @@ def main(names: list[str] | None = None) -> None:
     total = 0.0
     build_total = 0.0
     cold_total = 0.0
+    compiles_total = 0
     for name in HEADLINE:
         d: dict = {}
         dt = run_query(spark, name, sf_dir, detail=d)
@@ -321,6 +337,7 @@ def main(names: list[str] | None = None) -> None:
         total += dt
         build_total += d.get("build", 0.0)
         cold_total += d.get("cold", 0.0)
+        compiles_total += d["codegen_compiles"]
 
     out = {
         "metric": "headline_queries_total_wall",
@@ -335,6 +352,9 @@ def main(names: list[str] | None = None) -> None:
         # materialization).  "value"/"queries" keep the r01 definition.
         "build_s": round(build_total, 4),
         "cold_s": round(cold_total, 4),
+        # classes the 19 headline queries compiled after the warm-up; a
+        # codegen-cache thrash shows here without a re-run
+        "codegen_compiles": compiles_total,
     }
     # round-2+ operators, timed separately so "value" keeps the same
     # 19-query definition as the round-1 baseline
@@ -474,8 +494,9 @@ def main(names: list[str] | None = None) -> None:
         "detail": "extended",
         "extended_queries": extended,
         # per-query build (DataFrame construction, incl. eager
-        # checkpoint materialization) and rep-1 cold write seconds for
-        # the 19 headline queries (r13 VERDICT #3)
+        # checkpoint materialization), rep-1 cold write seconds (r13
+        # VERDICT #3) and codegen_compiles / codegen_ms for the 19
+        # headline queries
         "headline_build_cold": per_query_extra,
     }
     scale = scale_ratios(spark, sf_dir, SCALE_FACTOR)

@@ -27,7 +27,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from dicomdb_spark.llm.similarity import _SCALE, fixed_sum
+from dicomdb_spark.llm.similarity import _SCALE, fixed_dist2_col, fixed_sum
 
 
 def _sub(vec_col: str, s: int, sub_dim: int):
@@ -232,17 +232,8 @@ def adc_lut(
             )
         ).alias("e"),
     ).select("query_id", "e.sub", "e.qv")
-    d_i = F.aggregate(
-        F.zip_with(
-            F.col("qv"),
-            F.col("cv"),
-            lambda x, y: F.floor((x - y) * (x - y) * F.lit(_SCALE)).cast("long"),
-        ),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
     return qsub.join(F.broadcast(cb), "sub").select(
-        "query_id", "sub", "code", d_i.alias("d_i")
+        "query_id", "sub", "code", fixed_dist2_col("qv", "cv").alias("d_i")
     )
 
 

@@ -22,8 +22,9 @@ Determinism: every dot product, norm and squared distance in the
 product floored at a fixed scale, then an exact int64 sum — so values
 are bit-identical across partitionings, batch boundaries and engines
 (the DuckDB oracles spell the same formula as
-``registry._core._SQL_DOT`` / ``_sql_norm``); ranking ties break by
-neighbor id.
+``registry._core._sql_dot`` / ``_sql_dist2`` / ``_sql_norm``).  Where a
+squared distance is folded in Catalyst instead, it is
+:func:`fixed_dist2_col`.  Ranking ties break by neighbor id.
 """
 
 from __future__ import annotations
@@ -55,6 +56,17 @@ def fixed_sum(x, y):
 def fixed_norm(x):
     """sqrt(fixed_sum(x, x) / 1e12) per row — the exact L2 norm."""
     return np.sqrt(fixed_sum(x, x) / _SCALE)
+
+
+def fixed_dist2_col(a, b) -> Column:
+    """Σ floor((a−b)·(a−b)·1e12) of two ``array<double>`` columns as an
+    exact long, folded in Catalyst (no Python boundary): ``fixed_sum(d,
+    d)`` with ``d = a − b``, and the twin of ``_core._sql_dist2``."""
+    return F.aggregate(
+        F.zip_with(a, b, lambda x, y: F.floor((x - y) * (x - y) * F.lit(_SCALE)).cast("long")),
+        F.lit(0).cast("long"),
+        lambda acc, x: acc + x,
+    )
 
 
 def _matrix(s: pd.Series):

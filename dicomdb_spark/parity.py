@@ -31,6 +31,7 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 
 from dicomdb_spark.io import TABLES
+from dicomdb_spark.session import CODEGEN_CACHE_ENTRIES
 
 SF_SMOKE = "/root/testdata/sf0.001"
 SF_CORRECT = "/root/testdata/sf0.01"
@@ -330,6 +331,9 @@ def hostile_session(app_name: str):
         # query ~400 of a full-registry run.  Env-tunable for small hosts.
         .config("spark.driver.memory",
                 os.environ.get("SELFCHECK_DRIVER_MEM", "12g"))
+        # the same JVM-wide codegen cache as get_spark's sessions; it
+        # changes no result, only how often a repeated plan recompiles
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
         .getOrCreate()
     )
     spark.sparkContext.setLogLevel("ERROR")

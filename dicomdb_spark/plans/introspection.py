@@ -132,3 +132,15 @@ def aqe_final_plan(df: DataFrame) -> str:
     s = df._jdf.queryExecution().executedPlan().toString()
     assert "isFinalPlan=true" in s or "AdaptiveSparkPlan" not in s, s[:200]
     return s.split("== Initial Plan ==")[0]
+
+
+def codegen_counters(spark) -> tuple[int, float]:
+    """(classes compiled, milliseconds spent compiling) so far in this
+    session's JVM: Janino compiles are counted by ``CodegenMetrics`` and
+    timed by ``CodeGenerator.compileTime`` (ns).  A cache hit counts
+    neither, so the delta over a repeated query is its recompile work;
+    under a local master it covers the driver and the executors."""
+    jvm = spark.sparkContext._jvm
+    n = jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME().getCount()
+    ns = jvm.org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator.compileTime()
+    return int(n), ns / 1e6

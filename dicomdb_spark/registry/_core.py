@@ -60,12 +60,28 @@ def _dsum(expr: str, alias: str) -> str:
     return f"CAST(SUM(CAST(floor(({expr}) * 10000) AS BIGINT)) / 10000.0 AS DOUBLE) AS {alias}"
 
 
-# DuckDB twins of llm/similarity.fixed_sum: the fixed-point dot of the
-# ``v`` columns of aliases a and b, and the exact L2 norm
-_SQL_DOT = (
-    "(SELECT SUM(CAST(floor(a.v[i.i] * b.v[i.i] * 1e12) AS BIGINT)) "
-    "FROM unnest(range(1, len(a.v) + 1)) i(i)) / 1e12"
-)
+# DuckDB twins of llm/similarity.fixed_sum: the fixed-point dot and
+# squared distance of the ``v`` columns of two aliases, and the exact
+# L2 norm.  The product order ``x * y * 1e12`` is part of the formula.
+def _sql_dot(a: str, b: str) -> str:
+    """fixed_sum(a.v, b.v) / 1e12: the fixed-point dot as a double."""
+    return (
+        f"(SELECT SUM(CAST(floor({a}.v[i.i] * {b}.v[i.i] * 1e12) AS BIGINT)) "
+        f"FROM unnest(range(1, len({a}.v) + 1)) i(i)) / 1e12"
+    )
+
+
+def _sql_dist2(a: str, b: str) -> str:
+    """Σ floor((a.v − b.v)² · 1e12) as an exact integer — the squared
+    distance in fixed-point units (twin of ``similarity.fixed_dist2_col``)."""
+    d = f"({a}.v[i.i] - {b}.v[i.i])"
+    return (
+        f"(SELECT SUM(CAST(floor({d} * {d} * 1e12) AS BIGINT)) "
+        f"FROM unnest(range(1, len({a}.v) + 1)) i(i))"
+    )
+
+
+_SQL_DOT = _sql_dot("a", "b")
 
 
 def _sql_norm(alias: str = "") -> str:

@@ -18,6 +18,8 @@ from dicomdb_spark.registry._core import (
     _SQL_DOT,
     _dsum,
     _fanout,
+    _sql_dist2,
+    _sql_dot,
     _sql_norm,
     register,
 )
@@ -892,8 +894,7 @@ ORACLES["text_fingerprint"] = r"""
       FROM e),
     pairs AS (
       SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-             CAST((SELECT SUM(CAST(floor(q.v[i.i] * c.v[i.i] * 1e12) AS BIGINT))
-                   FROM unnest(range(1, len(q.v) + 1)) i(i)) / 1e12 AS DOUBLE)
+             CAST({_sql_dot('q', 'c')} AS DOUBLE)
                / (q.nrm * c.nrm) AS cosine_sim
       FROM n q JOIN n c ON q.vec_id < 10 AND q.vec_id <> c.vec_id)
     SELECT query_id, neighbor_id, cosine_sim,
@@ -3720,10 +3721,7 @@ def _kmeans_ctes(k: int = 8, iters: int = 2) -> tuple[str, str]:
     the DuckDB replay of llm/clustering.py's deterministic loop
     (identical floor-scaled integer arithmetic).  Returns (joined
     CTE text, name of the final assignment CTE)."""
-    dist = (
-        "(SELECT SUM(CAST(floor((e.v[i.i] - c.v[i.i]) * (e.v[i.i] - c.v[i.i]) * 1e12)"
-        " AS BIGINT)) FROM unnest(range(1, len(e.v) + 1)) i(i))"
-    )
+    dist = _sql_dist2("e", "c")
     ctes = [f"cent0 AS (SELECT CAST(vec_id AS INTEGER) AS cid, v FROM base WHERE vec_id < {k})"]
     for it in range(iters + 1):  # final extra assignment uses cent{iters}
         ctes.append(

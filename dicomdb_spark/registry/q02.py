@@ -13,7 +13,15 @@ from dicomdb_spark.operators import aggregates as agg
 from dicomdb_spark.operators import joins as oj
 from dicomdb_spark.operators import windows as ow
 from dicomdb_spark.session import local_fanout
-from dicomdb_spark.registry._core import _SQL_DOT, _dsum, _fanout, _sql_norm, register
+from dicomdb_spark.registry._core import (
+    _SQL_DOT,
+    _dsum,
+    _fanout,
+    _sql_dist2,
+    _sql_dot,
+    _sql_norm,
+    register,
+)
 from dicomdb_spark.registry.q01 import (
     _DUPSPAN_N,
     _SQL_DOCS2,
@@ -812,12 +820,6 @@ def dedup_dup_spans(spark, sf_dir):
 # Batch 9 — LLM-pipeline depth: product-quantization ANN
 # ---------------------------------------------------------------------------
 
-_PQ_DIST = (
-    "(SELECT SUM(CAST(floor((e.v[i.i] - c.v[i.i]) * (e.v[i.i] - c.v[i.i]) * 1e12)"
-    " AS BIGINT)) FROM unnest(range(1, len(e.v) + 1)) i(i))"
-)
-
-
 def _pq_oracle(
     m: int = 4,
     sub_dim: int = 16,
@@ -861,7 +863,7 @@ def _pq_oracle(
         ctes.append(
             f"""a{s}0 AS (
       SELECT vec_id, v, (list(cid ORDER BY d, cid))[1] AS cid FROM (
-        SELECT e.vec_id, e.v, c.cid, {_PQ_DIST} AS d
+        SELECT e.vec_id, e.v, c.cid, {_sql_dist2('e', 'c')} AS d
         FROM sub{s} e CROSS JOIN c{s}0 c) t
       GROUP BY vec_id, v)"""
         )
@@ -878,7 +880,7 @@ def _pq_oracle(
         ctes.append(
             f"""code{s} AS (
       SELECT vec_id, {s} AS sub, (list(cid ORDER BY d, cid))[1] AS code FROM (
-        SELECT e.vec_id, c.cid, {_PQ_DIST} AS d
+        SELECT e.vec_id, c.cid, {_sql_dist2('e', 'c')} AS d
         FROM sub{s} e CROSS JOIN c{s}1 c) t
       GROUP BY vec_id)"""
         )
@@ -895,11 +897,8 @@ def _pq_oracle(
     ctes.append(f"cb AS ({cb_u})")
     ctes.append(f"qsub AS ({qsub_u})")
     ctes.append(
-        """lut AS (
-      SELECT q.query_id, q.sub, c.code,
-             (SELECT SUM(CAST(floor((q.v[i.i] - c.v[i.i]) * (q.v[i.i] - c.v[i.i]) * 1e12)
-                             AS BIGINT))
-              FROM unnest(range(1, len(q.v) + 1)) i(i)) AS d_i
+        f"""lut AS (
+      SELECT q.query_id, q.sub, c.code, {_sql_dist2('q', 'c')} AS d_i
       FROM qsub q JOIN cb c ON q.sub = c.sub)"""
     )
     if ivf_cells:
@@ -2978,13 +2977,12 @@ def sketch_hll_merge(spark, sf_dir):
 
 @register(
     "ann_mips_topk",
-    """
+    f"""
     WITH e AS (
       SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
     pairs AS (
       SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-             CAST((SELECT SUM(CAST(floor(q.v[i.i] * c.v[i.i] * 1e12) AS BIGINT))
-                   FROM unnest(range(1, len(q.v) + 1)) i(i)) / 1e12 AS DOUBLE)
+             CAST({_sql_dot('q', 'c')} AS DOUBLE)
                AS dot_score
       FROM e q JOIN e c ON q.vec_id < 10 AND q.vec_id <> c.vec_id)
     SELECT query_id, neighbor_id, dot_score,
@@ -3984,8 +3982,7 @@ def layout_compaction_bins(spark, sf_dir):
       WHERE vec_id < 10),
     scored AS (
       SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-             CAST((SELECT SUM(CAST(floor(q.v[i.i] * c.v[i.i] * 1e12) AS BIGINT))
-                   FROM unnest(range(1, len(q.v) + 1)) i(i)) / 1e12 AS DOUBLE)
+             CAST({_sql_dot('q', 'c')} AS DOUBLE)
                / (q.nrm * c.nrm) AS cosine_sim
       FROM probes q JOIN n c ON q.probe = c.bucket AND q.vec_id <> c.vec_id)
     SELECT query_id, neighbor_id, cosine_sim, CAST(rank AS INTEGER) AS rank

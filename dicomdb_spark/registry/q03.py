@@ -19,6 +19,7 @@ from dicomdb_spark.registry._core import (
     QUERIES,
     _SQL_DOT,
     _fanout,
+    _sql_dist2,
     _sql_norm,
     register,
 )
@@ -3801,11 +3802,7 @@ def corpus_span_corruption(spark, sf_dir):
     probe AS (SELECT vec_id, v FROM e WHERE vec_id < 8),
     od AS (
       SELECT a.vec_id AS ia, b.vec_id AS ib,
-             CAST((SELECT SUM(CAST(floor((a.v[i.i] - b.v[i.i])
-                                         * (a.v[i.i] - b.v[i.i]) * 1e12)
-                                   AS BIGINT))
-                   FROM unnest(range(1, len(a.v) + 1)) i(i)) AS BIGINT)
-               AS dorig2
+             CAST({_sql_dist2('a', 'b')} AS BIGINT) AS dorig2
       FROM probe a JOIN probe b ON a.vec_id < b.vec_id),
     pd AS (
       SELECT pa.vec_id AS ia, pb.vec_id AS ib,
@@ -3879,15 +3876,7 @@ def emb_random_projection_jl(spark, sf_dir):
         .select(
             "ia",
             "ib",
-            F.aggregate(
-                F.zip_with(
-                    "va",
-                    "vb",
-                    lambda a, b: F.floor((a - b) * (a - b) * 1e12).cast("long"),
-                ),
-                F.lit(0).cast("long"),
-                lambda acc, x: acc + x,
-            ).alias("dorig2"),
+            lsim.fixed_dist2_col("va", "vb").alias("dorig2"),
         )
     )
     qa = proj.filter(F.col("vec_id") < 8).select(

@@ -14,7 +14,7 @@ from dicomdb_spark.operators import aggregates as agg
 from dicomdb_spark.operators import joins as oj
 from dicomdb_spark.operators import windows as ow
 from dicomdb_spark.session import local_fanout
-from dicomdb_spark.registry._core import _sql_norm, register
+from dicomdb_spark.registry._core import _sql_dist2, _sql_dot, _sql_norm, register
 from dicomdb_spark.registry.q03 import _sql_hex_int
 from dicomdb_spark.registry.q04 import _SQL_NORMSQ, _normsq_col
 from dicomdb_spark.registry.q06 import _SQL_DAYSERIES, _dayseries_rk
@@ -440,12 +440,9 @@ def a_cochran_armitage(spark, sf_dir):
       FROM e),
     pairs AS (
       SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-             CAST((SELECT SUM(CAST(floor(q.v[i.i] * c.v[i.i] * 1e12) AS BIGINT))
-                   FROM unnest(range(1, len(q.v) + 1)) i(i)) / 1e12 AS DOUBLE)
+             CAST({_sql_dot('q', 'c')} AS DOUBLE)
                / (q.nrm * c.nrm) AS cosine_sim,
-             (SELECT SUM(CAST(floor((q.v[i.i] - c.v[i.i])
-                                    * (q.v[i.i] - c.v[i.i]) * 1e12) AS BIGINT))
-              FROM unnest(range(1, len(q.v) + 1)) i(i)) AS d2_sc
+             {_sql_dist2('q', 'c')} AS d2_sc
       FROM n q JOIN n c ON q.vec_id < 10 AND q.vec_id <> c.vec_id),
     ct AS (SELECT query_id, neighbor_id FROM (
              SELECT query_id, neighbor_id,
@@ -492,16 +489,7 @@ def ann_metric_agreement(spark, sf_dir):
         "query_id",
         F.col("vec_id").alias("neighbor_id"),
         lsim.cosine_exact_vec(F.col("qv"), F.col("v")).alias("cosine_sim"),
-        F.aggregate(
-            F.zip_with(
-                "qv", "v",
-                lambda a, b: F.floor((a - b) * (a - b) * F.lit(1e12)).cast(
-                    "long"
-                ),
-            ),
-            F.lit(0).cast("long"),
-            lambda acc, x: acc + x,
-        ).alias("d2_sc"),
+        lsim.fixed_dist2_col("qv", "v").alias("d2_sc"),
     )
     wc = Window.partitionBy("query_id").orderBy(
         F.col("cosine_sim").desc(), "neighbor_id"

@@ -1641,6 +1641,17 @@ def test_session_conf_daemon_only_on_local_masters():
         assert "spark.executorEnv.PYTHONPATH" not in session.session_conf(master, 2)
 
 
+def test_session_conf_sizes_the_codegen_cache_on_every_master():
+    """The codegen cache key is set whatever the master: it is a static
+    conf that the first session in a JVM fixes for the JVM's life."""
+    from dicomdb_spark import session
+
+    for master in ("local[4]", "local-cluster[2,1,1024]", "spark://host:7077"):
+        conf = session.session_conf(master, 2)
+        assert conf["spark.sql.codegen.cache.maxEntries"] == str(session.CODEGEN_CACHE_ENTRIES)
+    assert session.CODEGEN_CACHE_ENTRIES > 190  # one neardup session's classes
+
+
 def test_reliable_checkpoints_are_cleaned(tmp_path):
     """With SPARK_GRAFT_CHECKPOINT_DIR set, the session deletes reliable
     checkpoint files of collected RDDs; unset, the conf says Spark's

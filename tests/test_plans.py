@@ -535,3 +535,33 @@ def test_bfs_hops_plan_is_lineage_truncated(spark):
     assert "Scan ExistingRDD" in plan, plan
     # the whole consumer plan is project-over-scan: a handful of nodes
     assert plan.count("\n") < 12, plan
+
+
+# More than 100 distinct generated classes (Spark's default codegen cache
+# size) on sf0.001, all from plans AQE settles on the same way every
+# run.  dedup_ngram_jaccard is left out: which of its joins AQE
+# broadcasts depends on which stage finishes first, so a late pass can
+# still meet (and compile) a new variant.
+_CODEGEN_MIX = (
+    "ann_bruteforce_topk",
+    "dedup_minhash_lsh",
+    "dedup_simhash_near",
+    "ann_lsh_topk",
+    "ann_pq_topk",
+)
+
+
+def test_repeated_query_mix_compiles_nothing_once_warm(spark):
+    """The JVM's codegen cache holds a repeated mix's classes: a third
+    pass compiles none.  With a 100-entry cache the mix evicts its own
+    classes, and every pass recompiles (and re-JITs) them."""
+    from dicomdb_spark.parity import SF_SMOKE, release
+
+    compiled = []
+    for _ in range(3):
+        before, _ms = pi.codegen_counters(spark)
+        for name in _CODEGEN_MIX:
+            QUERIES[name](spark, SF_SMOKE).write.format("noop").mode("overwrite").save()
+        release(spark)
+        compiled.append(pi.codegen_counters(spark)[0] - before)
+    assert compiled[2] == 0, compiled
