@@ -37,18 +37,25 @@ def entry(spark: SparkSession) -> DataFrame:
 # module a query runs, puts the query's name at the head; a name leaves
 # once a newer CORRECTNESS_r{N}.json row shows it matching.
 FRONT: tuple[str, ...] = (
-    # one spelling of the fixed-point SQL dot and squared distance
-    # (registry._core._sql_dot / _sql_dist2) and of its Catalyst fold
-    # (llm/similarity.fixed_dist2_col): the queries that use them
-    "ann_bruteforce_topk", "ann_mips_topk", "ann_lsh_multiprobe_topk",
-    "ann_metric_agreement", "dedup_semantic_kmeans", "ann_ivf_trained_topk",
-    "ann_pq_topk", "ann_ivf_pq_topk", "emb_random_projection_jl",
+    # oracle SQL rewritten (results unchanged): the fixed-point dot,
+    # norm and squared distance as a list lambda (registry._core
+    # ._sql_dot/_sql_norm/_sql_dist2) ...
+    "ann_bruteforce_topk", "ann_lsh_buckets", "ann_lsh_topk",
+    "ann_rerank_topk", "ann_ivf_topk", "dedup_embedding_cosine",
+    "ann_ivf_trained_topk", "dedup_semantic_kmeans", "ann_pq_topk",
+    "ann_mips_topk", "ann_ivf_pq_topk", "ann_lsh_multiprobe_topk",
+    "corpus_semantic_dedup_pipeline", "ann_recall_eval",
+    "emb_random_projection_jl", "ml_knn_classify", "ann_metric_agreement",
+    # ... and the unrolled chains through registry._core._chain
+    "dedup_components", "corpus_dedup_pipeline", "graph_kcore",
+    "graph_bfs_hops", "er_transitive_merge", "emb_top_pc_power",
+    "graph_modularity", "corpus_dedup_survivorship", "layout_hilbert_key",
+    "corpus_dup_cluster_sizes", "layout_skipping_sim", "graph_ktruss_peel",
+    "layout_skipping_sim_2d", "graph_harmonic_centrality",
+    "graph_ktruss_fixpoint", "graph_eccentricity",
     # one fixed-point kernel (llm/similarity.fixed_sum) under every
-    # dot/norm/distance UDF: the other queries that reach it
-    "ann_lsh_buckets", "ann_lsh_topk",
-    "ann_rerank_topk", "multimodal_ann", "ann_ivf_topk",
-    "dedup_embedding_cosine",
-    "corpus_semantic_dedup_pipeline", "ann_recall_eval", "ml_knn_classify",
+    # dot/norm/distance UDF: the other query that reaches it
+    "multimodal_ann",
     # serie-frame exam linkage in the stack kernel; by-value xlsx UDF
     "u3_stack_assembly", "e1_import_pipeline", "s4_xlsx_roundtrip",
     # NULL-row guards, lineage cuts and kernel/persist rewrites that
@@ -63,20 +70,16 @@ FRONT: tuple[str, ...] = (
     "multimodal_flac_meta", "corpus_weighted_sample", "ml_decision_stump",
     "corpus_curriculum_phases", "dedup_osa_distance", "text_lcs_length",
     "scd2_history", "tpch_q20_shape", "ml_roc_auc", "ml_average_precision",
-    "multimodal_container_stats", "dedup_dup_spans", "graph_bfs_hops",
-    "er_transitive_merge", "dedup_ngram_jaccard", "dedup_ngram_containment",
-    "dedup_components", "corpus_dedup_pipeline", "corpus_dedup_survivorship",
-    "corpus_dup_cluster_sizes", "graph_modularity", "graph_pagerank",
-    "graph_ppr_seeds", "text_textrank_weighted", "a_market_basket",
-    "sketch_bloom_join", "sketch_bloom_fpr_audit", "graph_hits_unrolled",
-    "a_theil_sen_daily", "a_hodges_lehmann", "a_rfm_segmentation",
-    "dedup_lsh_s_curve", "dedup_prefix_jaccard", "dedup_prefix_containment",
+    "multimodal_container_stats", "dedup_dup_spans", "dedup_ngram_jaccard",
+    "dedup_ngram_containment", "graph_pagerank", "graph_ppr_seeds",
+    "text_textrank_weighted", "a_market_basket", "sketch_bloom_join",
+    "sketch_bloom_fpr_audit", "graph_hits_unrolled", "a_theil_sen_daily",
+    "a_hodges_lehmann", "a_rfm_segmentation", "dedup_lsh_s_curve",
+    "dedup_prefix_jaccard", "dedup_prefix_containment",
     "er_threshold_sweep", "dedup_bbit_minhash_audit", "text_rake_keywords",
     "text_boilerplate_ngrams", "dedup_minhash_jaccard_est",
-    "graph_harmonic_centrality", "graph_degree_ccdf",
-    "a_segment_migration_matrix", "graph_katz_bounded", "graph_kcore",
-    "emb_top_pc_power", "a_weighted_kappa", "graph_eccentricity",
-    "graph_ktruss_fixpoint", "graph_ktruss_peel", "text_ccnet_buckets",
+    "graph_degree_ccdf", "a_segment_migration_matrix", "graph_katz_bounded",
+    "a_weighted_kappa", "text_ccnet_buckets",
 )
 
 

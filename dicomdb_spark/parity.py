@@ -4,7 +4,8 @@ Each registry query has a DuckDB twin in ``ORACLES``; a check runs both
 over the same parquet sf-dir and compares canonicalized rows.  This
 module holds the pieces every such check shares:
 
-* ``oracle_con`` — a DuckDB connection with one view per table.
+* ``oracle_con`` — a memory-capped DuckDB connection with one view per
+  table.
 * two canons, because two comparison rules are in use:
   ``canon_frame`` is the driver-shaped pandas rule (selfcheck, the
   benchmark's checked warm-up) and ``canon_rows`` the stricter row rule
@@ -36,10 +37,17 @@ from dicomdb_spark.session import CODEGEN_CACHE_ENTRIES
 SF_SMOKE = "/root/testdata/sf0.001"
 SF_CORRECT = "/root/testdata/sf0.01"
 
+# Per-connection DuckDB memory cap.  The largest oracle peaks at about
+# 1.9 GB at sf0.01 (a_hodges_lehmann, a_theil_sen_daily); one that
+# outgrows the cap raises DuckDB's OutOfMemoryException in its own
+# check instead of growing the process until the host kills it.
+ORACLE_MEMORY_LIMIT = "4GB"
+
 
 def oracle_con(sf_dir: str, tables=TABLES) -> duckdb.DuckDBPyConnection:
-    """DuckDB connection with ``tables`` registered as parquet views."""
-    con = duckdb.connect()
+    """DuckDB connection, capped at ``ORACLE_MEMORY_LIMIT``, with
+    ``tables`` registered as parquet views."""
+    con = duckdb.connect(config={"memory_limit": ORACLE_MEMORY_LIMIT})
     for t in tables:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
     return con

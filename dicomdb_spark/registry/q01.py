@@ -16,8 +16,10 @@ from dicomdb_spark.session import local_fanout
 from dicomdb_spark.registry._core import (
     ORACLES,
     _SQL_DOT,
+    _chain,
     _dsum,
     _fanout,
+    _min_label_chain,
     _sql_dist2,
     _sql_dot,
     _sql_norm,
@@ -1209,29 +1211,14 @@ def _docs_with_dupes(spark, sf_dir):
     return docs.unionAll(exact).unionAll(near)
 
 
-def _component_oracle(iters: int = 3) -> str:
+def _component_oracle() -> str:
     """Min-label propagation unrolled over the minhash pair list —
     the SQL replay of dedup.min_label_components."""
-    steps = []
-    prev = "l0"
-    for i in range(1, iters + 1):
-        steps.append(
-            f"""l{i} AS (
-      SELECT v.doc_id, least(v.lbl, coalesce(min(n.lbl), v.lbl)) AS lbl
-      FROM {prev} v LEFT JOIN (
-        SELECT e.dst AS doc_id, l.lbl FROM e JOIN {prev} l ON e.src = l.doc_id) n
-      ON v.doc_id = n.doc_id
-      GROUP BY v.doc_id, v.lbl)"""
-        )
-        prev = f"l{i}"
-    chain = ",\n    ".join(steps)
+    chain, prev = _min_label_chain("doc_id")
     return f"""
     {_minhash_pairs_cte()},
-    verts AS (SELECT DISTINCT doc_id FROM (
-      SELECT id1 AS doc_id FROM pairs UNION ALL SELECT id2 FROM pairs) t),
     e AS (SELECT id1 AS src, id2 AS dst FROM pairs
           UNION ALL SELECT id2, id1 FROM pairs),
-    l0 AS (SELECT doc_id, doc_id AS lbl FROM verts),
     {chain}
     SELECT lbl AS component, count(*) AS n_members, min(doc_id) AS keeper_id
     FROM {prev} GROUP BY 1
@@ -3716,33 +3703,42 @@ def dedup_embedding_cosine(spark, sf_dir):
     return t.mapInPandas(tiles, "id1 long, id2 long, cosine_sim double")
 
 
+def _kmeans_assign_sql(src: str, cent: str) -> str:
+    """One k-means assignment over ``src(vec_id, v)``: each vector's
+    nearest centroid of ``cent(cid, v)`` by fixed-point squared
+    distance, ties to the least cid."""
+    return f"""
+      SELECT vec_id, v, (list(cid ORDER BY d, cid))[1] AS cid FROM (
+        SELECT e.vec_id, e.v, c.cid, {_sql_dist2("e", "c")} AS d
+        FROM {src} e CROSS JOIN {cent} c) t
+      GROUP BY vec_id, v"""
+
+
+def _kmeans_mean_sql(asg: str) -> str:
+    """One k-means update: the per-dimension floor-scaled mean of each
+    cluster of the assignment ``asg(vec_id, v, cid)``."""
+    return f"""
+      SELECT cid, list(m ORDER BY pos) AS v FROM (
+        SELECT a.cid, i.i AS pos,
+               CAST(SUM(CAST(floor(a.v[i.i] * 1e12) AS BIGINT)) AS DOUBLE)
+                 / count(*) / 1e12 AS m
+        FROM {asg} a CROSS JOIN unnest(range(1, len(a.v) + 1)) i(i)
+        GROUP BY a.cid, i.i) t
+      GROUP BY cid"""
+
+
 def _kmeans_ctes(k: int = 8, iters: int = 2) -> tuple[str, str]:
     """Unrolled k-means training CTEs over a ``base(vec_id, v)`` CTE —
     the DuckDB replay of llm/clustering.py's deterministic loop
     (identical floor-scaled integer arithmetic).  Returns (joined
     CTE text, name of the final assignment CTE)."""
-    dist = _sql_dist2("e", "c")
-    ctes = [f"cent0 AS (SELECT CAST(vec_id AS INTEGER) AS cid, v FROM base WHERE vec_id < {k})"]
-    for it in range(iters + 1):  # final extra assignment uses cent{iters}
-        ctes.append(
-            f"""asg{it} AS (
-      SELECT vec_id, v, (list(cid ORDER BY d, cid))[1] AS cid FROM (
-        SELECT e.vec_id, e.v, c.cid, {dist} AS d
-        FROM base e CROSS JOIN cent{it} c) t
-      GROUP BY vec_id, v)"""
-        )
-        if it < iters:
-            ctes.append(
-                f"""cent{it + 1} AS (
-      SELECT cid, list(m ORDER BY pos) AS v FROM (
-        SELECT a.cid, i.i AS pos,
-               CAST(SUM(CAST(floor(a.v[i.i] * 1e12) AS BIGINT)) AS DOUBLE)
-                 / count(*) / 1e12 AS m
-        FROM asg{it} a CROSS JOIN unnest(range(1, len(a.v) + 1)) i(i)
-        GROUP BY a.cid, i.i) t
-      GROUP BY cid)"""
-            )
-    return ",\n    ".join(ctes), f"asg{iters}"
+    chain, last = _chain("asg0", iters, lambda i, prev: {
+        f"cent{i}": _kmeans_mean_sql(prev),
+        f"asg{i}": _kmeans_assign_sql("base", f"cent{i}"),
+    })
+    return f"""cent0 AS (SELECT CAST(vec_id AS INTEGER) AS cid, v FROM base WHERE vec_id < {k}),
+    asg0 AS ({_kmeans_assign_sql("base", "cent0")}),
+    {chain}""", last
 
 
 def _semantic_dedup_oracle(k: int = 8, iters: int = 2, threshold: float = 0.99) -> str:

@@ -17,6 +17,7 @@ from dicomdb_spark.registry._core import (
     _SQL_DOT,
     _dsum,
     _fanout,
+    _min_label_chain,
     _sql_dist2,
     _sql_dot,
     _sql_norm,
@@ -29,6 +30,8 @@ from dicomdb_spark.registry.q01 import (
     _SQL_SHINGLES,
     _SQL_TOKS,
     _docs_with_dupes,
+    _kmeans_assign_sql,
+    _kmeans_mean_sql,
     _minhash_pairs_cte,
     scd2_history,
 )
@@ -860,23 +863,8 @@ def _pq_oracle(
             f"c{s}0 AS (SELECT CAST(vec_id AS INTEGER) AS cid, v"
             f" FROM sub{s} WHERE vec_id < {k})"
         )
-        ctes.append(
-            f"""a{s}0 AS (
-      SELECT vec_id, v, (list(cid ORDER BY d, cid))[1] AS cid FROM (
-        SELECT e.vec_id, e.v, c.cid, {_sql_dist2('e', 'c')} AS d
-        FROM sub{s} e CROSS JOIN c{s}0 c) t
-      GROUP BY vec_id, v)"""
-        )
-        ctes.append(
-            f"""c{s}1 AS (
-      SELECT cid, list(m ORDER BY pos) AS v FROM (
-        SELECT a.cid, i.i AS pos,
-               CAST(SUM(CAST(floor(a.v[i.i] * 1e12) AS BIGINT)) AS DOUBLE)
-                 / count(*) / 1e12 AS m
-        FROM a{s}0 a CROSS JOIN unnest(range(1, len(a.v) + 1)) i(i)
-        GROUP BY a.cid, i.i) t
-      GROUP BY cid)"""
-        )
+        ctes.append(f"a{s}0 AS ({_kmeans_assign_sql(f'sub{s}', f'c{s}0')})")
+        ctes.append(f"c{s}1 AS ({_kmeans_mean_sql(f'a{s}0')})")
         ctes.append(
             f"""code{s} AS (
       SELECT vec_id, {s} AS sub, (list(cid ORDER BY d, cid))[1] AS code FROM (
@@ -3238,30 +3226,15 @@ def w_ema_halflife(spark, sf_dir):
 # ---------------------------------------------------------------------------
 
 
-def _pipeline_oracle(iters: int = 3) -> str:
+def _pipeline_oracle() -> str:
     """Minhash pairs → min-label components → drop non-keepers,
     final corpus — the full dedup pipeline over the dup-injected
     docs2 (same chain as _component_oracle, different final)."""
-    steps = []
-    prev = "l0"
-    for i in range(1, iters + 1):
-        steps.append(
-            f"""l{i} AS (
-      SELECT v.doc_id, least(v.lbl, coalesce(min(n.lbl), v.lbl)) AS lbl
-      FROM {prev} v LEFT JOIN (
-        SELECT e.dst AS doc_id, l.lbl FROM e JOIN {prev} l ON e.src = l.doc_id) n
-      ON v.doc_id = n.doc_id
-      GROUP BY v.doc_id, v.lbl)"""
-        )
-        prev = f"l{i}"
-    chain = ",\n    ".join(steps)
+    chain, prev = _min_label_chain("doc_id")
     return f"""
     {_minhash_pairs_cte()},
-    verts AS (SELECT DISTINCT doc_id FROM (
-      SELECT id1 AS doc_id FROM pairs UNION ALL SELECT id2 FROM pairs) t),
     e AS (SELECT id1 AS src, id2 AS dst FROM pairs
           UNION ALL SELECT id2, id1 FROM pairs),
-    l0 AS (SELECT doc_id, doc_id AS lbl FROM verts),
     {chain}
     SELECT d.doc_id
     FROM docs2 d

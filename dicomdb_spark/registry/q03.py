@@ -18,7 +18,9 @@ from dicomdb_spark.registry._core import (
     ORACLES,
     QUERIES,
     _SQL_DOT,
+    _chain,
     _fanout,
+    _min_label_chain,
     _sql_dist2,
     _sql_norm,
     register,
@@ -227,20 +229,8 @@ def sql_dialect_portable(spark, sf_dir):
 # ---------------------------------------------------------------------------
 
 
-def _semantic_pipeline_oracle(iters: int = 3) -> str:
-    steps = []
-    prev = "l0"
-    for i in range(1, iters + 1):
-        steps.append(
-            f"""l{i} AS (
-      SELECT v.vec_id, least(v.lbl, coalesce(min(n2.lbl), v.lbl)) AS lbl
-      FROM {prev} v LEFT JOIN (
-        SELECT e.dst AS vec_id, l.lbl FROM e JOIN {prev} l ON e.src = l.vec_id) n2
-      ON v.vec_id = n2.vec_id
-      GROUP BY v.vec_id, v.lbl)"""
-        )
-        prev = f"l{i}"
-    chain = ",\n    ".join(steps)
+def _semantic_pipeline_oracle() -> str:
+    chain, prev = _min_label_chain("vec_id")
     return f"""
     WITH {_SQL_EMB_BASE},
     n AS (
@@ -251,11 +241,8 @@ def _semantic_pipeline_oracle(iters: int = 3) -> str:
       SELECT a.vec_id AS id1, b.vec_id AS id2
       FROM n a JOIN n b ON a.vec_id < b.vec_id
       WHERE CAST({_SQL_DOT} AS DOUBLE) / (a.nrm * b.nrm) >= 0.99),
-    verts AS (SELECT DISTINCT vec_id FROM (
-      SELECT id1 AS vec_id FROM pairs UNION ALL SELECT id2 FROM pairs) t),
     e AS (SELECT id1 AS src, id2 AS dst FROM pairs
           UNION ALL SELECT id2, id1 FROM pairs),
-    l0 AS (SELECT vec_id, vec_id AS lbl FROM verts),
     {chain}
     SELECT b.vec_id
     FROM base b
@@ -504,18 +491,13 @@ def _kcore_oracle(k: int = 2, rounds: int = 3) -> str:
     """Unrolled k-core peel: each round drops vertices with degree < k
     and restricts edges to survivors (same fixed-iteration style as
     the component oracles)."""
-    steps = []
-    prev = "e0"
-    for i in range(1, rounds + 1):
-        steps.append(
-            f"""d{i} AS (SELECT src, count(*) AS deg FROM {prev} GROUP BY 1),
-    v{i} AS (SELECT src FROM d{i} WHERE deg >= {k}),
-    e{i} AS (SELECT e.src, e.dst FROM {prev} e
+    chain, prev = _chain("e0", rounds, lambda i, prev: {
+        f"d{i}": f"SELECT src, count(*) AS deg FROM {prev} GROUP BY 1",
+        f"v{i}": f"SELECT src FROM d{i} WHERE deg >= {k}",
+        f"e{i}": f"""SELECT e.src, e.dst FROM {prev} e
              JOIN v{i} a ON e.src = a.src
-             JOIN v{i} b ON e.dst = b.src)"""
-        )
-        prev = f"e{i}"
-    chain = ",\n    ".join(steps)
+             JOIN v{i} b ON e.dst = b.src""",
+    })
     return f"""
     {_minhash_pairs_cte()},
     e0 AS (SELECT id1 AS src, id2 AS dst FROM pairs
@@ -1245,18 +1227,12 @@ def _bfs_oracle(rounds: int = 4) -> str:
     """Unrolled multi-source BFS relaxation over the minhash near-dup
     graph (same fixed-iteration discipline as the component oracles):
     h_i(v) = min(h_{i-1}(v), min over neighbors u of h_{i-1}(u)+1)."""
-    steps = []
-    prev = "h0"
-    for i in range(1, rounds + 1):
-        steps.append(
-            f"""h{i} AS (SELECT node, min(hop) AS hop FROM (
+    chain, prev = _chain("h0", rounds, lambda i, prev: {f"h{i}": f"""
+      SELECT node, min(hop) AS hop FROM (
       SELECT node, hop FROM {prev}
       UNION ALL
       SELECT e.dst AS node, p.hop + 1 AS hop
-      FROM {prev} p JOIN e ON e.src = p.node) t GROUP BY 1)"""
-        )
-        prev = f"h{i}"
-    chain = ",\n    ".join(steps)
+      FROM {prev} p JOIN e ON e.src = p.node) t GROUP BY 1"""})
     return f"""
     {_minhash_pairs_cte()},
     e AS (SELECT id1 AS src, id2 AS dst FROM pairs
@@ -2451,28 +2427,14 @@ def ann_recall_eval(spark, sf_dir):
     )
 
 
-def _er_merge_oracle(iters: int = 3) -> str:
+def _er_merge_oracle() -> str:
     """Min-label components over the phonetic-variant pair graph, then
     one canonical row per multi-variant entity."""
-    steps = []
-    prev = "l0"
-    for i in range(1, iters + 1):
-        steps.append(
-            f"""l{i} AS (
-      SELECT v.tok, least(v.lbl, coalesce(min(n.lbl), v.lbl)) AS lbl
-      FROM {prev} v LEFT JOIN (
-        SELECT e.dst AS tok, l.lbl FROM e JOIN {prev} l ON e.src = l.tok) n
-      ON v.tok = n.tok
-      GROUP BY v.tok, v.lbl)"""
-        )
-        prev = f"l{i}"
-    chain = ",\n    ".join(steps)
+    chain, prev = _min_label_chain("tok")
     return f"""
     WITH pp AS ({_phonetic_er_oracle()}),
     e AS (SELECT tok1 AS src, tok2 AS dst FROM pp
           UNION ALL SELECT tok2, tok1 FROM pp),
-    verts AS (SELECT DISTINCT src AS tok FROM e),
-    l0 AS (SELECT tok, tok AS lbl FROM verts),
     {chain}
     SELECT lbl AS canonical, CAST(count(*) AS BIGINT) AS n_variants,
            array_to_string(list_sort(list(tok)), ',') AS variants
@@ -2655,25 +2617,20 @@ def _power_iter_oracle(rounds: int = 4) -> str:
     """Unrolled power iteration v ← normalize(XᵀXv): the matrix is
     only ever touched via per-row dot products (s = Xv) and one
     per-dim aggregate (w = Xᵀs) — never materialized."""
-    steps = []
-    prev = "v0"
-    for r in range(1, rounds + 1):
-        steps.append(
-            f"""s{r} AS (
+    chain, prev = _chain("v0", rounds, lambda r, prev: {
+        f"s{r}": f"""
       SELECT d.vec_id,
              CAST(SUM(CAST(floor(d.val * {prev}.vv * 1000000) AS BIGINT))
                   AS DOUBLE) / 1000000.0 AS s
-      FROM d JOIN {prev} ON d.dim = {prev}.dim GROUP BY 1),
-    w{r} AS (
+      FROM d JOIN {prev} ON d.dim = {prev}.dim GROUP BY 1""",
+        f"w{r}": f"""
       SELECT d.dim,
              SUM(CAST(floor(s{r}.s * d.val * 1000000) AS BIGINT)) AS w
-      FROM d JOIN s{r} ON d.vec_id = s{r}.vec_id GROUP BY 1),
-    m{r} AS (SELECT max(abs(w)) AS m FROM w{r}),
-    v{r} AS (SELECT dim, CAST(w AS DOUBLE) / CAST(m AS DOUBLE) AS vv
-             FROM w{r} CROSS JOIN m{r})"""
-        )
-        prev = f"v{r}"
-    chain = ",\n    ".join(steps)
+      FROM d JOIN s{r} ON d.vec_id = s{r}.vec_id GROUP BY 1""",
+        f"m{r}": f"SELECT max(abs(w)) AS m FROM w{r}",
+        f"v{r}": f"""SELECT dim, CAST(w AS DOUBLE) / CAST(m AS DOUBLE) AS vv
+             FROM w{r} CROSS JOIN m{r}""",
+    })
     return f"""
     WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
     d AS (SELECT vec_id, i.i AS dim, v[i.i] AS val
@@ -3123,27 +3080,12 @@ def a_sla_percentiles(spark, sf_dir):
     )
 
 
-def _modularity_oracle(iters: int = 3) -> str:
-    steps = []
-    prev = "l0"
-    for i in range(1, iters + 1):
-        steps.append(
-            f"""l{i} AS (
-      SELECT v.doc_id, least(v.lbl, coalesce(min(n.lbl), v.lbl)) AS lbl
-      FROM {prev} v LEFT JOIN (
-        SELECT e.dst AS doc_id, l.lbl FROM e JOIN {prev} l ON e.src = l.doc_id) n
-      ON v.doc_id = n.doc_id
-      GROUP BY v.doc_id, v.lbl)"""
-        )
-        prev = f"l{i}"
-    chain = ",\n    ".join(steps)
+def _modularity_oracle() -> str:
+    chain, prev = _min_label_chain("doc_id")
     return f"""
     {_minhash_pairs_cte()},
-    verts AS (SELECT DISTINCT doc_id FROM (
-      SELECT id1 AS doc_id FROM pairs UNION ALL SELECT id2 FROM pairs) t),
     e AS (SELECT id1 AS src, id2 AS dst FROM pairs
           UNION ALL SELECT id2, id1 FROM pairs),
-    l0 AS (SELECT doc_id, doc_id AS lbl FROM verts),
     {chain},
     lab AS (SELECT doc_id, lbl FROM {prev}),
     mm AS (SELECT CAST(count(*) AS BIGINT) AS m FROM pairs),

@@ -18,7 +18,9 @@ from dicomdb_spark.registry._core import (
     ORACLES,
     QUERIES,
     _SQL_DOT,
+    _chain,
     _fanout,
+    _min_label_chain,
     _sql_norm,
     register,
 )
@@ -3346,30 +3348,15 @@ def w_zscore_peer_loo(spark, sf_dir):
     )
 
 
-def _survivor_oracle(iters: int = 3) -> str:
+def _survivor_oracle() -> str:
     """Label-propagation chain (the dedup_components replay) extended
     with the survivorship policy: canonical = longest text, tie min
     doc_id."""
-    steps = []
-    prev = "l0"
-    for i in range(1, iters + 1):
-        steps.append(
-            f"""l{i} AS (
-      SELECT v.doc_id, least(v.lbl, coalesce(min(n.lbl), v.lbl)) AS lbl
-      FROM {prev} v LEFT JOIN (
-        SELECT e.dst AS doc_id, l.lbl FROM e JOIN {prev} l ON e.src = l.doc_id) n
-      ON v.doc_id = n.doc_id
-      GROUP BY v.doc_id, v.lbl)"""
-        )
-        prev = f"l{i}"
-    chain = ",\n    ".join(steps)
+    chain, prev = _min_label_chain("doc_id")
     return f"""
     {_minhash_pairs_cte()},
-    verts AS (SELECT DISTINCT doc_id FROM (
-      SELECT id1 AS doc_id FROM pairs UNION ALL SELECT id2 FROM pairs) t),
     e AS (SELECT id1 AS src, id2 AS dst FROM pairs
           UNION ALL SELECT id2, id1 FROM pairs),
-    l0 AS (SELECT doc_id, doc_id AS lbl FROM verts),
     {chain},
     m AS (SELECT l.lbl AS component, l.doc_id,
                  CAST(length(d.text) AS BIGINT) AS chars,
@@ -3487,24 +3474,21 @@ def a_calendar_gap_fill(spark, sf_dir):
 _HILBERT_ORDER = 8  # 256 x 256 grid → 16-bit key
 
 
-def _hilbert_sql_ctes(order: int = _HILBERT_ORDER) -> str:
+def _hilbert_sql_ctes(order: int = _HILBERT_ORDER) -> tuple[str, str]:
     """Chained CTEs l1..l{order} unrolling the xy→d Hilbert walk
     (the public iterative algorithm: reflect+swap per level).  Each
     level consumes (x, y, d) from the previous one; the CASE algebra
     below is the same tree the Spark side builds, so both engines
     compute identical integers with no xor/bit builtins needed."""
-    ctes = []
-    prev = "l0"
-    for lvl in range(order):
-        s = 1 << (order - 1 - lvl)
-        cur = f"l{lvl + 1}"
+
+    def level(i: int, prev: str) -> dict[str, str]:
+        s = 1 << (order - i)
         quad = (
             f"(CASE WHEN (x // {s}) % 2 = 1 AND (y // {s}) % 2 = 0 THEN 3 "
             f"WHEN (x // {s}) % 2 = 1 AND (y // {s}) % 2 = 1 THEN 2 "
             f"ELSE (y // {s}) % 2 END)"
         )
-        ctes.append(
-            f"""{cur} AS (
+        return {f"l{i}": f"""
       SELECT event_id, gx, gy,
              d + {s * s} * {quad} AS d,
              CASE WHEN (y // {s}) % 2 = 0 THEN
@@ -3515,10 +3499,9 @@ def _hilbert_sql_ctes(order: int = _HILBERT_ORDER) -> str:
                CASE WHEN (x // {s}) % 2 = 1 THEN {s} - 1 - (x % {s})
                     ELSE x % {s} END
              ELSE y END AS y
-      FROM {prev})"""
-        )
-        prev = cur
-    return ",\n    ".join(ctes), prev
+      FROM {prev}"""}
+
+    return _chain("l0", order, level)
 
 
 def _hilbert_spark(df, order: int = _HILBERT_ORDER):

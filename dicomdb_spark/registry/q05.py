@@ -14,7 +14,7 @@ from dicomdb_spark.operators import aggregates as agg
 from dicomdb_spark.operators import joins as oj
 from dicomdb_spark.operators import windows as ow
 from dicomdb_spark.session import local_fanout
-from dicomdb_spark.registry._core import ORACLES, register
+from dicomdb_spark.registry._core import ORACLES, _chain, register
 from dicomdb_spark.registry.q01 import (
     _SQL_SHINGLES,
     _SQL_TOKS,
@@ -3118,35 +3118,40 @@ def sketch_hll_intersection(spark, sf_dir):
     )
 
 
-def _ktruss_peel_oracle(rounds: int = 3) -> str:
-    ctes = []
-    for i in range(1, rounds + 1):
-        prev = "e0" if i == 1 else f"e{i - 1}r"
-        ctes.append(
-            f"""t{i} AS (
+def _ktruss_ctes(rounds: int, min_sup: int) -> tuple[str, str]:
+    """Truss peeling of the minhash pair graph: round i keeps the edges
+    of e{i-1} that close at least ``min_sup`` of its triangles.  Returns
+    the CTE text through e{rounds} and the per-round edge-count UNION."""
+    chain, _ = _chain("e0", rounds, lambda i, prev: {
+        f"t{i}": f"""
       SELECT e1.id1 AS a, e1.id2 AS b, e2.id2 AS c
       FROM {prev} e1
       JOIN {prev} e2 ON e2.id1 = e1.id2
-      JOIN {prev} e3 ON e3.id1 = e1.id1 AND e3.id2 = e2.id2),
-    s{i} AS (
+      JOIN {prev} e3 ON e3.id1 = e1.id1 AND e3.id2 = e2.id2""",
+        f"s{i}": f"""
       SELECT id1, id2, count(*) AS sup FROM (
         SELECT a AS id1, b AS id2 FROM t{i}
         UNION ALL SELECT b, c FROM t{i}
         UNION ALL SELECT a, c FROM t{i}) t
-      GROUP BY 1, 2),
-    e{i}r AS MATERIALIZED (SELECT e.id1, e.id2 FROM {prev} e
+      GROUP BY 1, 2""",
+        f"e{i}": f"""SELECT e.id1, e.id2 FROM {prev} e
               JOIN s{i} s ON s.id1 = e.id1 AND s.id2 = e.id2
-              WHERE s.sup >= 1)"""
-        )
+              WHERE s.sup >= {min_sup}""",
+    })
     unions = "\n    UNION ALL ".join(
         f"SELECT CAST({i} AS BIGINT) AS round, CAST(count(*) AS BIGINT) AS n_edges "
-        f"FROM {'e0' if i == 0 else f'e{i}r'}"
+        f"FROM e{i}"
         for i in range(rounds + 1)
     )
-    return f"""
-    {_minhash_pairs_cte()},
+    return f"""{_minhash_pairs_cte()},
     e0 AS MATERIALIZED (SELECT id1, id2 FROM pairs),
-    {','.join(ctes)}
+    {chain}""", unions
+
+
+def _ktruss_peel_oracle(rounds: int = 3) -> str:
+    ctes, unions = _ktruss_ctes(rounds, 1)
+    return f"""
+    {ctes}
     {unions}
     """
 

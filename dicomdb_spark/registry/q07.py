@@ -14,7 +14,7 @@ from dicomdb_spark.operators import aggregates as agg
 from dicomdb_spark.operators import joins as oj
 from dicomdb_spark.operators import windows as ow
 from dicomdb_spark.session import local_fanout
-from dicomdb_spark.registry._core import register
+from dicomdb_spark.registry._core import _chain, register
 from dicomdb_spark.registry.q01 import (
     _SQL_DOCS2,
     _SQL_TOKS,
@@ -29,7 +29,7 @@ from dicomdb_spark.registry.q04 import (
     _hilbert_spark,
     _normsq_col,
 )
-from dicomdb_spark.registry.q05 import _SQL_BARS, _bars
+from dicomdb_spark.registry.q05 import _SQL_BARS, _bars, _ktruss_ctes
 from dicomdb_spark.registry.q06 import _SQL_DAYSERIES, _dayseries_rk
 
 
@@ -170,18 +170,12 @@ def _harmonic_oracle(rounds: int = 4, n_seeds: int = 5) -> str:
     """Per-seed unrolled BFS over the minhash near-dup graph, then
     harmonic centrality with the ×12 integer weighting (12 = lcm of
     hop distances 1..4, so Σ 12/d is exact int64)."""
-    steps = []
-    prev = "h0"
-    for i in range(1, rounds + 1):
-        steps.append(
-            f"""h{i} AS (SELECT seed, node, min(hop) AS hop FROM (
+    chain, prev = _chain("h0", rounds, lambda i, prev: {f"h{i}": f"""
+      SELECT seed, node, min(hop) AS hop FROM (
       SELECT seed, node, hop FROM {prev}
       UNION ALL
       SELECT p.seed, e.dst AS node, p.hop + 1 AS hop
-      FROM {prev} p JOIN e ON e.src = p.node) t GROUP BY 1, 2)"""
-        )
-        prev = f"h{i}"
-    chain = ",\n    ".join(steps)
+      FROM {prev} p JOIN e ON e.src = p.node) t GROUP BY 1, 2"""})
     return f"""
     {_minhash_pairs_cte()},
     e AS (SELECT id1 AS src, id2 AS dst FROM pairs
@@ -448,34 +442,9 @@ def sketch_dgim_window_count(spark, sf_dir):
 
 
 def _ktruss_fixpoint_oracle(rounds: int = 6, min_sup: int = 2) -> str:
-    ctes = []
-    for i in range(1, rounds + 1):
-        prev = "e0" if i == 1 else f"e{i - 1}r"
-        ctes.append(
-            f"""t{i} AS (
-      SELECT e1.id1 AS a, e1.id2 AS b, e2.id2 AS c
-      FROM {prev} e1
-      JOIN {prev} e2 ON e2.id1 = e1.id2
-      JOIN {prev} e3 ON e3.id1 = e1.id1 AND e3.id2 = e2.id2),
-    s{i} AS (
-      SELECT id1, id2, count(*) AS sup FROM (
-        SELECT a AS id1, b AS id2 FROM t{i}
-        UNION ALL SELECT b, c FROM t{i}
-        UNION ALL SELECT a, c FROM t{i}) t
-      GROUP BY 1, 2),
-    e{i}r AS MATERIALIZED (SELECT e.id1, e.id2 FROM {prev} e
-              JOIN s{i} s ON s.id1 = e.id1 AND s.id2 = e.id2
-              WHERE s.sup >= {min_sup})"""
-        )
-    unions = "\n    UNION ALL ".join(
-        f"SELECT CAST({i} AS BIGINT) AS round, CAST(count(*) AS BIGINT) AS n_edges "
-        f"FROM {'e0' if i == 0 else f'e{i}r'}"
-        for i in range(rounds + 1)
-    )
+    ctes, unions = _ktruss_ctes(rounds, min_sup)
     return f"""
-    {_minhash_pairs_cte()},
-    e0 AS MATERIALIZED (SELECT id1, id2 FROM pairs),
-    {','.join(ctes)},
+    {ctes},
     curve AS ({unions}),
     fixn AS (SELECT n_edges AS fix_edges FROM curve
              WHERE round = {rounds}),

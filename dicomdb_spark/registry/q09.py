@@ -8,7 +8,7 @@ from pyspark.sql import functions as F
 from dicomdb_spark.operators.lineage import cut_lineage
 
 from dicomdb_spark.io import load_table
-from dicomdb_spark.registry._core import register
+from dicomdb_spark.registry._core import _chain, register
 from dicomdb_spark.functions import text
 from dicomdb_spark.operators import windows as ow
 from dicomdb_spark.registry.q01 import (
@@ -1546,18 +1546,12 @@ def _ecc_oracle(rounds: int = 6) -> str:
     self-certifying (the ktruss discipline)."""
     from dicomdb_spark.registry.q01 import _minhash_pairs_cte
 
-    steps = []
-    prev = "d0"
-    for i in range(1, rounds + 1):
-        steps.append(
-            f"""d{i} AS MATERIALIZED (SELECT src, node, min(d) AS d FROM (
+    chain, prev = _chain("d0", rounds, lambda i, prev: {f"d{i}": f"""
+      SELECT src, node, min(d) AS d FROM (
       SELECT src, node, d FROM {prev}
       UNION ALL
       SELECT p.src, e.dst AS node, p.d + 1 AS d
-      FROM {prev} p JOIN e ON e.src = p.node) t GROUP BY 1, 2)"""
-        )
-        prev = f"d{i}"
-    chain = ",\n    ".join(steps)
+      FROM {prev} p JOIN e ON e.src = p.node) t GROUP BY 1, 2"""})
     return f"""
     {_minhash_pairs_cte()},
     e AS MATERIALIZED (SELECT id1 AS src, id2 AS dst FROM pairs

@@ -1688,15 +1688,31 @@ def test_reliable_checkpoints_are_cleaned(tmp_path):
 
 def test_fixed_sum_matches_duckdb_fragments():
     """The one fixed-point kernel (similarity.fixed_sum / fixed_norm)
-    equals the DuckDB oracle fragments (_SQL_DOT, _sql_norm) bit for
-    bit on hostile vectors: signed zeros, subnormals (a negative
+    equals the DuckDB oracle fragments (_SQL_DOT, _sql_norm, _sql_dist2)
+    bit for bit on hostile vectors: signed zeros, subnormals (a negative
     subnormal product floors to -1 only in the (a·b)·1e12 order),
-    mixed signs, dims 1 and 64, and magnitudes at the int64 edge."""
+    mixed signs, dims 1 and 64, and magnitudes at the int64 edge.  The
+    fragments' list-lambda sum also equals the correlated
+    ``(SELECT SUM(...) FROM unnest(range(...)))`` spelling it replaced,
+    including a NULL vector, a NULL element and a ``b`` shorter than
+    ``a``, where NULL terms drop out of both sums."""
     import duckdb
     import numpy as np
 
     from dicomdb_spark.llm.similarity import _SCALE, fixed_norm, fixed_sum
-    from dicomdb_spark.registry._core import _SQL_DOT, _sql_norm
+    from dicomdb_spark.registry._core import _SQL_DOT, _sql_dist2, _sql_norm
+
+    def correlated(term):
+        return (f"(SELECT SUM(CAST(floor({term}) AS BIGINT)) "
+                "FROM unnest(range(1, len(a.v) + 1)) i(i))")
+
+    d = "(a.v[i.i] - b.v[i.i])"
+    old = (f"CAST({correlated('a.v[i.i] * b.v[i.i] * 1e12')} / 1e12 AS DOUBLE), "
+           f"sqrt(CAST({correlated('a.v[i.i] * a.v[i.i] * 1e12')} / 1e12 AS DOUBLE))")
+    new = f"CAST({_SQL_DOT} AS DOUBLE), {_sql_norm('a')}"
+    old_d2, new_d2 = correlated(f"{d} * {d} * 1e12"), _sql_dist2("a", "b")
+    vecs = ("FROM (SELECT CAST(? AS DOUBLE[]) AS v) a, "
+            "(SELECT CAST(? AS DOUBLE[]) AS v) b")
 
     tiny = 5e-324
     rng = np.random.default_rng(7)
@@ -1722,19 +1738,39 @@ def test_fixed_sum_matches_duckdb_fragments():
         for d in (1, 64)
         for s in (1e-7, 1.0, 50.0)
     ]
+    nulls = [
+        (None, [1.0, 2.0]),
+        ([1.0, 2.0], None),
+        ([1.0, None, 3.0], [0.5, 0.25, 0.125]),
+        ([None], [1.0]),
+        ([0.5, 1.5, -2.5], [2.0]),
+        ([0.1], [0.2, 0.3, 0.4]),
+    ]
     con = duckdb.connect()
+
+    def same(x, y):
+        return x is None and y is None or (
+            x is not None and y is not None and float(x).hex() == float(y).hex())
+
+    for a, b in pairs + nulls:
+        got = con.execute(f"SELECT {new}, {old} {vecs}", [a, b]).fetchone()
+        assert same(got[0], got[2]) and same(got[1], got[3]), (a, b, got)
     for a, b in pairs:
-        dot_sql, na_sql = con.execute(
-            f"SELECT CAST({_SQL_DOT} AS DOUBLE), {_sql_norm('a')} "
-            "FROM (SELECT CAST(? AS DOUBLE[]) AS v) a, "
-            "(SELECT CAST(? AS DOUBLE[]) AS v) b",
-            [a, b],
-        ).fetchone()
         A, B = np.asarray([a]), np.asarray([b])
+        dot_sql, na_sql = con.execute(f"SELECT {new} {vecs}", [a, b]).fetchone()
         dot_np = float(fixed_sum(A, B)[0] / _SCALE)
         na_np = float(fixed_norm(A)[0])
         assert dot_np.hex() == dot_sql.hex(), (a, b, dot_np, dot_sql)
         assert na_np.hex() == na_sql.hex(), (a, na_np, na_sql)
+    # squared distance: the pairs whose Σ (a−b)²·1e12 fits in int64
+    fit = [(a, b) for a, b in pairs
+           if np.sum(np.subtract(a, b) ** 2) * _SCALE < 2.0**62]
+    for a, b in fit + nulls:
+        d2, d2_old = con.execute(f"SELECT {new_d2}, {old_d2} {vecs}", [a, b]).fetchone()
+        assert same(d2, d2_old), (a, b, d2, d2_old)
+        if (a, b) in fit:
+            D = np.subtract([a], [b])
+            assert int(fixed_sum(D, D)[0]) == d2, (a, b, d2)
     # the order is load-bearing: x·(y·1e12) floors this pair to -1
     assert fixed_sum(np.asarray([-tiny]), np.asarray([0.5])) == 0
 

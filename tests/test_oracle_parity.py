@@ -41,6 +41,35 @@ def test_parity(spark, name):
     assert not mismatches, f"{name}: first diffs: {mismatches[:3]}"
 
 
+# Oracles that ran out of a 3 GB DuckDB memory limit at sf0.01 while
+# their label-propagation, BFS and k-core chains were inlined (each
+# round re-ran every earlier one) or a vector sum was a correlated
+# per-dimension subquery (one row per pair and dimension).  The test
+# holds them to that 3 GB, below oracle_con's own cap, so an oracle
+# that creeps back toward the cap fails here first.
+_ITERATIVE_MEMORY_LIMIT = "3GB"
+_ITERATIVE = (
+    "corpus_dedup_pipeline",
+    "corpus_dedup_survivorship",
+    "corpus_dup_cluster_sizes",
+    "corpus_semantic_dedup_pipeline",
+    "dedup_components",
+    "graph_bfs_hops",
+    "graph_harmonic_centrality",
+    "graph_kcore",
+    "graph_modularity",
+)
+
+
+@pytest.mark.parametrize("name", _ITERATIVE)
+def test_iterative_oracle_fits_memory_cap(name):
+    """DuckDB only: the oracle finishes inside a 3 GB memory limit."""
+    con = oracle_con(SF_CORRECT)
+    con.execute(f"SET memory_limit = '{_ITERATIVE_MEMORY_LIMIT}'")
+    assert con.execute(ORACLES[name]).fetchall()
+    con.close()
+
+
 def test_all_queries_have_oracles_or_are_flagged():
     missing = set(QUERIES) - set(ORACLES)
     # non-SQL-expressible ops are allowed to miss an oracle; keep the
