@@ -32,7 +32,7 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 
 from dicomdb_spark.io import TABLES
-from dicomdb_spark.session import CODEGEN_CACHE_ENTRIES
+from dicomdb_spark.session import get_spark
 
 SF_SMOKE = "/root/testdata/sf0.001"
 SF_CORRECT = "/root/testdata/sf0.01"
@@ -322,28 +322,22 @@ CORPORA = {
 
 
 def hostile_session(app_name: str):
-    """``local[8]`` session with a deliberately non-UTC timezone: the
-    engine must reach parity under the driver's own session settings
-    (``io.prepare`` switches to UTC on every table load)."""
-    from pyspark.sql import SparkSession
-
-    spark = (
-        SparkSession.builder.master("local[8]")
-        .appName(app_name)
-        .config("spark.sql.session.timeZone", "America/New_York")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.ui.enabled", "false")
+    """``local[8]`` session built like ``session.get_spark``'s (worker
+    daemon, one Python worker pool, codegen cache) but with a
+    deliberately non-UTC timezone: the engine must reach parity under
+    the driver's own session settings (``io.prepare`` switches to UTC
+    on every table load)."""
+    spark = get_spark(app_name, "local[8]", 8, {
+        "spark.sql.session.timeZone": "America/New_York",
         # hundreds of queries share ONE JVM: localCheckpoint blocks from
         # the iterative queries linger until the driver GC lets the
         # ContextCleaner reap them, so the default 1g heap OOMs around
         # query ~400 of a full-registry run.  Env-tunable for small hosts.
-        .config("spark.driver.memory",
-                os.environ.get("SELFCHECK_DRIVER_MEM", "12g"))
-        # the same JVM-wide codegen cache as get_spark's sessions; it
-        # changes no result, only how often a repeated plan recompiles
-        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
-        .getOrCreate()
-    )
+        "spark.driver.memory": os.environ.get("SELFCHECK_DRIVER_MEM", "12g"),
+        # Spark's default, as in a driver's own session: pandas
+        # conversions (createDataFrame, toPandas) take the non-Arrow path
+        "spark.sql.execution.arrow.pyspark.enabled": "false",
+    })
     spark.sparkContext.setLogLevel("ERROR")
     return spark
 

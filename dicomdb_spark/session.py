@@ -21,6 +21,15 @@ a 1000-executor cluster:
   distinct classes, so the default LRU evicted all of them and every
   repeat of a query recompiled (Janino) and re-JITted (HotSpot) its
   whole plan.
+* One Python worker pool per executor: the JVM keys its worker
+  daemons by the workers' environment, and the SQL runners (pandas
+  UDFs, ``mapInPandas``) add ``SPARK_SIMPLIFIED_TRACEBACK=1`` to theirs.
+  Setting it for every worker gives the RDD runner
+  (``foreachPartition`` upsert writers and sinks) the same environment,
+  so it reuses their daemon and idle workers instead of forking a
+  second daemon with its own workers.  RDD-runner errors then carry
+  simplified tracebacks too (without the frames of pyspark's worker
+  loop).
 """
 
 from __future__ import annotations
@@ -95,7 +104,7 @@ def session_conf(
         "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
         "spark.sql.codegen.cache.maxEntries": str(CODEGEN_CACHE_ENTRIES),
     }
-    # Both keys below are set on every master, to Spark's default where
+    # The keys below are set on every master, to Spark's default where
     # they do not apply: the first session's conf becomes JVM system
     # properties, which a later session in the same process inherits
     # for any key it leaves unset.
@@ -105,6 +114,12 @@ def session_conf(
         "true" if os.environ.get("SPARK_GRAFT_CHECKPOINT_DIR") else "false"
     )
     conf["spark.python.daemon.module"] = "pyspark.daemon"
+    # Equalises the RDD runner's worker environment with the one the
+    # SQL runners build when
+    # spark.sql.execution.pyspark.udf.simplifiedTraceback.enabled is
+    # true (the default): one daemon and worker pool per executor, not
+    # two.
+    conf["spark.executorEnv.SPARK_SIMPLIFIED_TRACEBACK"] = "1"
     conf.update(extra_conf or {})
     if is_local_master(master):
         conf["spark.python.daemon.module"] = "dicomdb_spark.worker_daemon"

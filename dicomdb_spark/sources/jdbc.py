@@ -71,6 +71,10 @@ def render_upsert_sql(
     same classification semantics, lets the integration test drive the
     REAL writer round-trip against DuckDB when no MySQL exists.
     Pure function so both renderings are testable without a database.
+
+    A row of key columns only has nothing to update: ANSI renders
+    ``DO NOTHING`` and MySQL a no-op self-assignment of the first key
+    (an empty SET list is a syntax error in both).
     """
     d = row.asDict() if isinstance(row, Row) else dict(row)
     key_list = list(key_cols)
@@ -78,25 +82,24 @@ def render_upsert_sql(
     cols = list(d)
     col_sql = ", ".join(_sql_ident(c, dialect) for c in cols)
     val_sql = ", ".join(_sql_literal(d[c], dialect) for c in cols)
+    updated = [_sql_ident(c, dialect) for c in cols if c not in keys]
     if dialect == "mysql":
-        upd_sql = ", ".join(
-            f"{_sql_ident(c)} = VALUES({_sql_ident(c)})"
-            for c in cols
-            if c not in keys
-        )
+        upd_sql = ", ".join(f"{c} = VALUES({c})" for c in updated)
+        if not upd_sql:
+            upd_sql = f"{_sql_ident(key_list[0])} = {_sql_ident(key_list[0])}"
         return (
             f"INSERT INTO {_sql_ident(table)} ({col_sql}) VALUES ({val_sql}) "
             f"ON DUPLICATE KEY UPDATE {upd_sql}"
         )
     conflict = ", ".join(_sql_ident(c, dialect) for c in key_list)
-    upd_sql = ", ".join(
-        f"{_sql_ident(c, dialect)} = excluded.{_sql_ident(c, dialect)}"
-        for c in cols
-        if c not in keys
+    action = (
+        "DO UPDATE SET " + ", ".join(f"{c} = excluded.{c}" for c in updated)
+        if updated
+        else "DO NOTHING"
     )
     return (
         f"INSERT INTO {_sql_ident(table, dialect)} ({col_sql}) "
-        f"VALUES ({val_sql}) ON CONFLICT ({conflict}) DO UPDATE SET {upd_sql}"
+        f"VALUES ({val_sql}) ON CONFLICT ({conflict}) {action}"
     )
 
 

@@ -206,21 +206,35 @@ def test_selfcheck_exits_nonzero_on_failure(spark, monkeypatch, tmp_path):
 
 
 def test_selfcheck_from_foreign_cwd(tmp_path):
-    """selfcheck started outside the repo with no PYTHONPATH: its
-    session keeps the stock Python worker daemon, so the workers cannot
-    import the package and every pandas UDF a query ships must pickle
+    """selfcheck's checks, started outside the repo with no PYTHONPATH,
+    under a foreign driver's own session (Spark's defaults plus a
+    non-UTC timezone): its workers come from the stock daemon and cannot
+    import the package, so every pandas UDF a query ships must pickle
     by value (the xlsx reader, the stack-assembly kernel, and the
-    llm/similarity fixed-point kernel under the LSH and k-means UDFs)."""
+    llm/similarity fixed-point kernel under the LSH and k-means UDFs).
+    selfcheck's own session puts the package on the workers' path."""
     import os
     import subprocess
 
     repo = Path(__file__).resolve().parents[1]
+    script = (
+        "import sys; sys.path.insert(0, sys.argv[1])\n"
+        "from pyspark.sql import SparkSession\n"
+        "import selfcheck\n"
+        "spark = (SparkSession.builder.master('local[4]')\n"
+        "         .config('spark.sql.session.timeZone', 'America/New_York')\n"
+        "         .config('spark.driver.memory', '2g')\n"
+        "         .config('spark.ui.enabled', 'false').getOrCreate())\n"
+        "print('DAEMON', spark.sparkContext.getConf().get('spark.python.daemon.module', 'pyspark.daemon'))\n"
+        "selfcheck.hostile_session = lambda app: spark\n"
+        "selfcheck.main(sys.argv[2:])\n"
+    )
     env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
-    env["SELFCHECK_DRIVER_MEM"] = "2g"  # four queries need no 12g heap
     run = subprocess.run(
-        [sys.executable, str(repo / "selfcheck.py"), "s4_xlsx_roundtrip",
+        [sys.executable, "-c", script, str(repo), "s4_xlsx_roundtrip",
          "u3_stack_assembly", "ann_lsh_topk", "dedup_semantic_kmeans"],
         cwd=tmp_path, env=env, capture_output=True, text=True, timeout=600,
     )
     assert run.returncode == 0, run.stdout[-3000:] + run.stderr[-3000:]
+    assert "DAEMON pyspark.daemon" in run.stdout, run.stdout[-3000:]
     assert "4 queries: ALL MATCH" in run.stdout, run.stdout[-3000:]

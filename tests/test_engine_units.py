@@ -656,6 +656,20 @@ def test_render_upsert_sql_nonfinite_and_idents():
     assert sql.count("NULL") == 2 and "1.5" in sql
 
 
+def test_render_upsert_sql_all_key_row():
+    """A row made only of key columns (a link table) renders a no-op
+    conflict action, never an empty SET list."""
+    row = {"exam_id": 1, "serie_id": 2}
+    assert jdbc.render_upsert_sql("link", row, ["exam_id", "serie_id"]) == (
+        "INSERT INTO `link` (`exam_id`, `serie_id`) VALUES (1, 2) "
+        "ON DUPLICATE KEY UPDATE `exam_id` = `exam_id`"
+    )
+    assert jdbc.render_upsert_sql("link", row, ["exam_id", "serie_id"], "ansi") == (
+        'INSERT INTO "link" ("exam_id", "serie_id") VALUES (1, 2) '
+        'ON CONFLICT ("exam_id", "serie_id") DO NOTHING'
+    )
+
+
 def test_exam_series_and_seqname(spark):
     exam = spark.createDataFrame(
         [Row(Eid=1, ExamName="E1", MachineName="Verio"), Row(Eid=2, ExamName="E2", MachineName="Prisma")]
@@ -1624,6 +1638,59 @@ def test_local_session_from_foreign_cwd(tmp_path):
     assert "RESULT dicomdb_spark.worker_daemon 30" in out
 
 
+def test_sql_and_rdd_runners_share_one_worker_daemon(tmp_path):
+    """A pandas UDF (SQL Arrow runner) and an RDD ``mapPartitions`` (RDD
+    runner, as under ``foreachPartition`` writers) get workers forked by
+    the same daemon, and the JVM runs exactly one Python daemon."""
+    import json
+    import subprocess
+
+    script = (
+        "import json, os, sys; sys.path.insert(0, sys.argv[1])\n"
+        "from dicomdb_spark.session import get_spark\n"
+        "s = get_spark('one_pool', 'local[2]', 2)\n"
+        "df = s.range(4).repartition(2)\n"
+        "sql = {r.p for r in df.mapInPandas(\n"
+        "    lambda it: (b.assign(p=os.getppid())[['p']] for b in it), 'p long').collect()}\n"
+        "rdd = set(df.rdd.mapPartitions(lambda rows: [os.getppid()]).collect())\n"
+        "jvm = s.sparkContext._gateway.proc.pid\n"
+        "daemons = []\n"
+        "for d in filter(str.isdigit, os.listdir('/proc')):\n"
+        "    try:\n"
+        "        with open(f'/proc/{d}/stat') as fh:\n"
+        "            ppid = int(fh.read().rsplit(')', 1)[1].split()[1])\n"
+        "        with open(f'/proc/{d}/cmdline', 'rb') as fh:\n"
+        "            cmd = fh.read()\n"
+        "    except (OSError, IndexError):\n"
+        "        continue\n"
+        "    if ppid == jvm and b'daemon' in cmd:\n"
+        "        daemons.append(int(d))\n"
+        "print('RESULT', json.dumps({'sql': sorted(sql), 'rdd': sorted(rdd), 'daemons': daemons}))\n"
+        "s.stop()\n"
+    )
+    repo = str(Path(__file__).resolve().parents[1])
+    out = subprocess.run(
+        [sys.executable, "-c", script, repo], cwd=tmp_path, check=True, text=True,
+        capture_output=True, timeout=300,
+    ).stdout
+    res = json.loads(out.split("RESULT ", 1)[1])
+    assert len(res["daemons"]) == 1, res
+    assert res["sql"] == res["rdd"] == res["daemons"], res
+
+
+def test_foreach_partition_writer_error_reaches_driver(spark):
+    """With the RDD runner's simplified tracebacks, an exception raised
+    in a ``foreachPartition`` writer still names itself in the driver's
+    error."""
+    def connect():
+        raise ValueError("db down")
+
+    writer = jdbc.upsert_partition_writer("exam", ["Eid"], connect)
+    with pytest.raises(Exception) as err:
+        spark.range(2).foreachPartition(writer)
+    assert "ValueError: db down" in str(err.value)
+
+
 def test_session_conf_daemon_only_on_local_masters():
     """local/local[N] get the worker daemon and the package root last on
     the workers' PYTHONPATH; local-cluster and real masters name the
@@ -1639,6 +1706,17 @@ def test_session_conf_daemon_only_on_local_masters():
         assert conf["spark.python.daemon.module"] == "pyspark.daemon"
         assert conf["spark.executorEnv.PYTHONPATH"] == "/a"
         assert "spark.executorEnv.PYTHONPATH" not in session.session_conf(master, 2)
+
+
+def test_session_conf_shares_one_worker_pool_on_every_master():
+    """Every master gives all Python workers the environment the SQL
+    runners add, so the RDD runner reuses their daemon and pool."""
+    from dicomdb_spark import session
+
+    for master in ("local", "local[4]", "local-cluster[2,1,1024]",
+                   "spark://host:7077", "yarn", "k8s://host"):
+        conf = session.session_conf(master, 2)
+        assert conf["spark.executorEnv.SPARK_SIMPLIFIED_TRACEBACK"] == "1"
 
 
 def test_session_conf_sizes_the_codegen_cache_on_every_master():

@@ -120,3 +120,22 @@ def test_ansi_rendering_quotes_and_conflict_clause():
         'ON CONFLICT ("eid") DO UPDATE SET "label" = excluded."label", '
         '"f" = excluded."f"'
     )
+
+
+def test_all_key_row_upsert_is_a_noop(tmp_path):
+    """A link table whose columns are all key: the first upsert inserts,
+    re-upserting the same rows changes nothing (DuckDB rejects the
+    empty ``DO UPDATE SET`` this used to render)."""
+    con = duckdb.connect(str(tmp_path / "link.duckdb"))
+    con.execute(
+        "CREATE TABLE link (exam_id INTEGER, serie_id INTEGER,"
+        " PRIMARY KEY (exam_id, serie_id))"
+    )
+    rows = [{"exam_id": 1, "serie_id": 10}, {"exam_id": 1, "serie_id": 11}]
+    for _ in range(2):
+        for row in rows:
+            con.execute(
+                render_upsert_sql("link", row, ["exam_id", "serie_id"], dialect="ansi")
+            )
+        assert con.execute("SELECT * FROM link ORDER BY ALL").fetchall() == [(1, 10), (1, 11)]
+    con.close()
